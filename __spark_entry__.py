@@ -304,81 +304,66 @@ def _q_cube_request(spark, sf):
 
 
 # Certification-window rotation: the driver oracle-checks the FIRST 50
-# ``queries()`` entries each round (cap confirmed in r3/r4).  Round 21
-# window per the r20 verdict #7 and the documented r21 queue: (a) the
-# names whose CODE changed this round (changed outranks rotation, the
-# r13-r20 precedent — text_segment_dedup's window rewrite,
-# dedup_graph_quality's broadcast union-find labels, dedup_components'
-# local path sharing the extracted _edge_union_find), then (b) the
-# queue head agg_monthly_rollup / agg_order_stats (displaced from the
-# r20 window by the rounding-tie names), then (c) the full r12 cohort
-# by name order, then (d) the r14 cohort head by driver-row age, to
-# the cap. With this window the union of driver rows across rounds
-# still covers every oracle-backed registry name (verified: zero
-# never-certified names remain). ROWS-ONLY names are EXCLUDED
-# (r19 verdict #2; the 16 names live in
-# tools/gen_catalog.ROWS_ONLY_REASONS).
+# ``queries()`` entries (``_CERTIFY_FIRST`` is moved to the front of the
+# registry). The window is filled by one rule: (a) the oracle-backed
+# names whose code path changed since the last window, then (b) the
+# rest by queue age — the round each name last hash-matched in a
+# CORRECTNESS_r*.json, oldest first, ties by name. ROWS-ONLY names
+# (tools/gen_catalog.ROWS_ONLY_REASONS) never enter the window.
 _CERTIFY_FIRST = [
-    # ---- code changed in r21 ----
-    "text_segment_dedup",  # r21: one-window screen rewrite
-    "dedup_graph_quality",  # r21: broadcast union-find labels (also r12 cohort)
-    "dedup_components",  # r21: local path refactored onto _edge_union_find
-    # ---- r21 queue head (displaced from the r20 window) ----
-    "agg_monthly_rollup",
-    "agg_order_stats",
-    # ---- the r12 cohort, drained in full by name order ----
-    "agg_pricing_summary",
+    # ---- code path changed: graph kernels choose driver vs distributed
+    # from the edge count (dedup._driver_edges) ----
+    "dedup_components",
     "dedup_cluster_sizes",
+    "dedup_cluster_purity",
+    "dedup_keep_policy",
     "dedup_entity_clusters",
-    "dedup_entity_fuzzy",
-    "dedup_lsh_scurve",
-    "dedup_url_canonical",
-    "dq_bootstrap_ci",
-    "dq_chi_squared",
-    "dq_column_diff",
-    "dq_completeness_profile",
-    "dq_theil_sen",
-    "events_burstiness",
-    "events_stickiness",
-    "events_stl_decompose",
-    "graph_assortativity",
-    "ivm_rollup_refresh",
-    "join_asof_nearest",
-    "mm_payload_profile",
-    "pipeline_quality_sweep",
-    "pipeline_temperature_mix",
-    "sample_deterministic",
-    "sample_stratified",
-    "scalar_json_agg",
-    "scalar_variant_funcs",
-    "sim_embedding_dim_profile",
-    "sim_label_separation",
-    "text_contamination",
-    "text_pack_sequences",
-    "text_quality_gate",
-    "text_rrf_fusion",
-    "text_source_profile",
-    "text_token_stats",
-    "text_top_bigrams",
-    "tpch_seasonal_index",
-    "tpch_supplier_hhi",
-    "tpch_supplier_part_counts",
-    "tpch_volume_shipping",
-    "unpivot_order_measures",
-    "window_distribution",
-    # ---- r14 cohort head by driver-row age, filling to the cap ----
-    "agg_cube",
-    "agg_mad_outliers",
-    "dedup_jaccard_prefix",
-    "dq_control_chart",
-    "dq_mann_kendall",
-    "dq_orders_integrity",
-    # r22 queue HEAD: dq_page_hinkley, events_calendar_heatmap,
-    # events_funnel, events_hampel_outliers, events_little_law,
-    # events_retention_matrix, fmt_csv_dialect_scan, fmt_json_scan,
-    # ivm_bitmap_distinct, ivm_multigrain_refresh, then the remaining
-    # r14 cohort by driver-row age. Rows-only names NEVER enter the
-    # window.
+    "graph_pagerank",
+    "graph_kcore",
+    "graph_lpa_communities",
+    "graph_closeness",
+    "graph_betweenness",
+    "pipeline_dedup_funnel",
+    "pipeline_leakage_split",
+    # ---- queue age: last certified in r14, then r15 ----
+    "dq_page_hinkley",
+    "events_calendar_heatmap",
+    "events_funnel",
+    "events_hampel_outliers",
+    "events_little_law",
+    "events_retention_matrix",
+    "fmt_csv_dialect_scan",
+    "fmt_json_scan",
+    "ivm_bitmap_distinct",
+    "ivm_multigrain_refresh",
+    "merge_upsert",
+    "mm_frame_sample",
+    "pandas_udaf_geomean",
+    "pipeline_dataset_card",
+    "pivot_status_by_priority",
+    "scalar_levenshtein_funcs",
+    "scd2_versions",
+    "semantic_prediction_join",
+    "sim_centroid_silhouette",
+    "sim_matryoshka_recall",
+    "sql_groupby_all",
+    "streaming_dedup",
+    "streaming_tumbling",
+    "text_heaps_curve",
+    "text_js_divergence",
+    "text_ngram_novelty",
+    "text_simpson_diversity",
+    "tpch_demand_xyz",
+    "tpch_discount_elasticity",
+    "tpch_fill_rate",
+    "tpch_priority_late",
+    "tpch_product_profit",
+    "tpch_rfm_migration",
+    "tpch_waiting_supplier",
+    "udtf_top_tokens",
+    "agg_approx_distinct",
+    "agg_approx_percentiles",
+    "agg_argmax",
 ]
 
 
@@ -721,12 +706,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # oracle-backed since r16: the fold-deterministic local power
         # method replays in a list-state recursive CTE (adaptive delta
         # cadence included); python-reference test remains
-        "graph_pagerank": lambda s, d: dedup.pagerank_dup_graph(
-            *_t(s, d, "documents"), local_threshold=10_000
-        ),
-        "dedup_components": lambda s, d: dedup.duplicate_components(
-            *_t(s, d, "documents"), local_threshold=20_000
-        ),
+        "graph_pagerank": lambda s, d: dedup.pagerank_dup_graph(*_t(s, d, "documents")),
+        "dedup_components": lambda s, d: dedup.duplicate_components(*_t(s, d, "documents")),
         # cluster-size histogram over the components output
         "dedup_cluster_sizes": lambda s, d: dedup.duplicate_cluster_sizes(
             *_t(s, d, "documents")
@@ -768,7 +749,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_components_chain": lambda s, d: dedup.duplicate_components(
             _t(s, d, "documents")[0],
             pairs=dedup.minhash_lsh_candidates(_t(s, d, "documents")[0]),
-            algorithm="star",
         ),
         # similarity search (north star)
         "sim_cosine_topk": lambda s, d: similarity.cosine_topk_bruteforce(*_t(s, d, "embeddings")),
@@ -957,9 +937,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # oracle-backed since r16: the k-ascending peel replays in a
         # list-state recursive CTE (coreness is peel-order-invariant);
         # pure-python Batagelj–Zaveršnik reference still asserted in tests
-        "graph_kcore": lambda s, d: dedup.kcore_decomposition(
-            *_t(s, d, "documents"), local_threshold=10_000
-        ),
+        "graph_kcore": lambda s, d: dedup.kcore_decomposition(*_t(s, d, "documents")),
         "tpch_important_stock": lambda s, d: tpch.important_stock(*_t(s, d, "supplier", "nation", "part")),
         "text_cm_heavy_hitters": lambda s, d: text.cm_heavy_hitters(*_t(s, d, "documents")),
         "dq_ab_ttest": lambda s, d: quality.ab_welch_ttest(*_t(s, d, "events")),
@@ -1031,12 +1009,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_triangles": lambda s, d: dedup.dup_graph_triangles(*_t(s, d, "documents")),
         # NEW r16: all-sources BFS -> closeness + eccentricity; exact
         # integers until one final division, bounded-CTE oracle replay
-        "graph_betweenness": lambda s, d: dedup.betweenness_centrality(
-            *_t(s, d, "documents"), local_threshold=10_000
-        ),
-        "graph_closeness": lambda s, d: dedup.closeness_centrality(
-            *_t(s, d, "documents"), local_threshold=10_000
-        ),
+        "graph_betweenness": lambda s, d: dedup.betweenness_centrality(*_t(s, d, "documents")),
+        "graph_closeness": lambda s, d: dedup.closeness_centrality(*_t(s, d, "documents")),
         "graph_hits": lambda s, d: dedup.hits_walk_centrality(*_t(s, d, "documents")),
         "dq_pettitt_changepoint": lambda s, d: quality.pettitt_changepoint(*_t(s, d, "orders")),
         "dq_mann_whitney": lambda s, d: quality.mann_whitney_u(*_t(s, d, "orders")),
@@ -1069,16 +1043,12 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # oracle-backed since r16: the synchronous rounds replay in a
         # list-state recursive CTE (deterministic min-label tie-break,
         # positional label-vector termination); python replay test kept
-        "graph_lpa_communities": lambda s, d: dedup.lpa_communities(
-            *_t(s, d, "documents"), local_threshold=20_000
-        ),
+        "graph_lpa_communities": lambda s, d: dedup.lpa_communities(*_t(s, d, "documents")),
         "tpch_lead_time": lambda s, d: tpch.fulfillment_lead_time(*_t(s, d, "lineitem", "orders")),
         "events_path_trigrams": lambda s, d: funnel.path_trigrams(*_t(s, d, "events")),
         "events_session_depth": lambda s, d: event_windows.session_depth_profile(*_t(s, d, "events")),
         "dedup_shingle_sweep": lambda s, d: dedup.shingle_width_sweep(*_t(s, d, "documents")),
-        "pipeline_dedup_funnel": lambda s, d: llm_pipeline.dedup_funnel_report(
-            *_t(s, d, "documents"), local_threshold=20_000
-        ),
+        "pipeline_dedup_funnel": lambda s, d: llm_pipeline.dedup_funnel_report(*_t(s, d, "documents")),
         "events_seasonal_anomaly": lambda s, d: windows.seasonal_anomaly_days(*_t(s, d, "events")),
         "join_full_outer": lambda s, d: joins.full_outer_reconcile(*_t(s, d, "orders", "lineitem")),
         "tpch_realized_margin": lambda s, d: tpch.realized_margin(*_t(s, d, "lineitem", "part")),
@@ -1105,9 +1075,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_slo_burn": lambda s, d: windows.slo_burn_table(*_t(s, d, "events")),
         "events_latency_trend": lambda s, d: windows.latency_percentile_trend(*_t(s, d, "events")),
         "pipeline_dsir_weights": lambda s, d: llm_pipeline.dsir_importance_weights(*_t(s, d, "documents")),
-        "pipeline_leakage_split": lambda s, d: llm_pipeline.leakage_safe_split(
-            *_t(s, d, "documents"), local_threshold=20_000
-        ),
+        "pipeline_leakage_split": lambda s, d: llm_pipeline.leakage_safe_split(*_t(s, d, "documents")),
         "events_autocorrelation": lambda s, d: windows.daily_autocorrelation(*_t(s, d, "events")),
         "pipeline_token_budget": lambda s, d: llm_pipeline.token_budget_allocation(*_t(s, d, "documents")),
         "pipeline_temperature_mix": lambda s, d: llm_pipeline.temperature_mixture_allocation(*_t(s, d, "documents")),
@@ -1312,8 +1280,8 @@ _PAIR_FEED_CTES = f"""
             )
 """
 
-#: Bit-exact replay of the r16 fold-deterministic local power method
-#: (dedup.pagerank_dup_graph local path) as CTE text ending in
+#: Bit-exact replay of the fold-deterministic driver-side power method
+#: (dedup.pagerank_dup_graph driver path) as CTE text ending in
 #: ``prout(doc_id, pagerank)`` — shared by the graph_pagerank oracle
 #: and every oracle that consumes ranks (r16: dedup_keep_policy).
 #: State = (it, stopped, loc_last, rank vector aligned to sorted ids);

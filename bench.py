@@ -249,11 +249,17 @@ def _force(df) -> None:
 
 
 def _bench_components_chain(spark, sf_dir: str) -> tuple[float, dict]:
-    """r4 verdict #5: scale-probe the LSH→components chain over the FULL
-    documents table — candidates from MinHash-LSH feeding the star
-    component loop, multi-partition. Asserts the O(log d) round bound and
-    that the loop really fans out beyond one partition."""
+    """Scale-probe the LSH→components chain over the FULL documents
+    table — candidates from MinHash-LSH feeding the star component loop,
+    multi-partition. Asserts the O(log d) round bound and that the loop
+    really fans out beyond one partition.
+
+    The testdata pair graph is far below ``dedup._DRIVER_GRAPH_EDGES``,
+    so the probe patches that constant to 0 to run the distributed loop
+    it measures, and sizes the rows-per-task constant so the loop runs
+    four tasks at every scale factor."""
     import math
+    from unittest import mock
 
     from datalake_local_spark.llm import dedup
     from datalake_local_spark.session import load_tables
@@ -261,14 +267,14 @@ def _bench_components_chain(spark, sf_dir: str) -> tuple[float, dict]:
     docs = load_tables(spark, sf_dir)["documents"]
     stats: dict = {}
     t0 = time.perf_counter()
-    out = dedup.duplicate_components(
-        docs,
-        pairs=dedup.minhash_lsh_candidates(docs),
-        algorithm="star",
-        num_partitions=4,
-        stats=stats,
-    )
-    n_rows = out.count()
+    pairs = dedup.minhash_lsh_candidates(docs).persist()
+    rows_per_task = max(1, math.ceil(2 * pairs.count() / 4))
+    with mock.patch.object(dedup, "_DRIVER_GRAPH_EDGES", 0), mock.patch.object(
+        dedup, "_COMPONENT_ROWS_PER_PARTITION", rows_per_task
+    ):
+        out = dedup.duplicate_components(docs, pairs=pairs, stats=stats)
+        n_rows = out.count()
+    pairs.unpersist()
     dt = round(time.perf_counter() - t0, 3)
     assert n_rows == docs.count(), "every node must receive a component"
     # star contracts geometrically: diameter <= n_edges, so rounds must
@@ -277,6 +283,23 @@ def _bench_components_chain(spark, sf_dir: str) -> tuple[float, dict]:
     assert stats["rounds"] <= bound, f"rounds {stats['rounds']} > log2 bound {bound}"
     assert stats["num_partitions"] > 1, "chain must run multi-partition"
     return dt, stats
+
+
+def _round_artifacts(root: str) -> list[str]:
+    """The canonical driver artifacts ``BENCH_r<N>.json`` under ``root``,
+    oldest round first. Suffixed ones (``BENCH_r20_c8.json``, an 8-core
+    run) are a different env and never a comparison base. Sorted on the
+    integer round: a lexical sort puts ``BENCH_r100`` before
+    ``BENCH_r21``."""
+    import glob
+    import re
+
+    by_round = {}
+    for p in glob.glob(os.path.join(root, "BENCH_r*.json")):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p))
+        if m:
+            by_round[int(m.group(1))] = p
+    return [by_round[n] for n in sorted(by_round)]
 
 
 def main() -> None:
@@ -369,25 +392,12 @@ def main() -> None:
     prev_name = None
     prev_rec_force = None
     try:
-        import glob
-
         sys.path.insert(
             0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
         )
         import bench_decode
 
-        import re
-
-        # canonical driver artifacts only: BENCH_r{N}.json. Suffixed
-        # ones (BENCH_r20_c8.json — the driver's 8-core scaling run)
-        # are a different env and must never be the comparison base
-        # (r21: the plain glob picked r20_c8 over r20, lexically).
-        arts = sorted(
-            p
-            for p in glob.glob(os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json"))
-            if re.fullmatch(r"BENCH_r\d+\.json", os.path.basename(p))
-        )
+        arts = _round_artifacts(os.path.dirname(os.path.abspath(__file__)))
         if arts and not dry_run:
             prev_rec = bench_decode.load_artifact(arts[-1])
             # only a same-SF pair is comparable (an ad-hoc sf0.001 run

@@ -17,6 +17,7 @@ Scale design (100 TB of text):
 
 from __future__ import annotations
 
+import math
 import threading
 from contextlib import contextmanager
 
@@ -24,6 +25,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: Persisted intermediates keyed by (kind, plan-fingerprint, source-files,
 #: params). Re-invocation with the same plan reuses the SAME persisted
@@ -474,13 +476,33 @@ def cross_source_contamination(
     )
 
 
-#: Target rows per task for the component loop's node/edge-grain frames;
-#: num_partitions defaults to ceil(edge_rows / this), so bench-scale
-#: graphs run single-task (per-round fixed overhead dominated otherwise)
-#: while a 100 TB pair graph fans out: coalesce alone only bounds the
-#: count from ABOVE, so duplicate_components also raises
+#: Directed edge rows below which a graph kernel runs its exact
+#: driver-side twin over the collected edges instead of the distributed
+#: loop: on a small graph the loop's cost is scheduler rounds, not data.
+#: The collect that decides is bounded by this limit (~1 MB of rows),
+#: so a graph of any size is safe to probe.
+_DRIVER_GRAPH_EDGES = 20_000
+
+#: Target edge rows per task for the distributed loops: P =
+#: ceil(edge_rows / this), so a graph just over the driver limit runs
+#: single-task while a 100 TB pair graph fans out. coalesce alone only
+#: bounds the count from ABOVE, so duplicate_components also raises
 #: spark.sql.shuffle.partitions to P for the loop when P exceeds it.
 _COMPONENT_ROWS_PER_PARTITION = 2_000_000
+
+
+def _driver_edges(edges: DataFrame) -> list | None:
+    """The graph kernels' one driver-vs-distributed decision: the rows of
+    ``edges`` (a directed edge list) when there are fewer than
+    ``_DRIVER_GRAPH_EDGES`` of them, else None — the caller then runs its
+    distributed loop."""
+    rows = edges.limit(_DRIVER_GRAPH_EDGES).collect()
+    return rows if len(rows) < _DRIVER_GRAPH_EDGES else None
+
+
+def _loop_partitions(n_edges: int) -> int:
+    """Task count for a distributed graph loop over ``n_edges`` rows."""
+    return max(1, math.ceil(n_edges / _COMPONENT_ROWS_PER_PARTITION))
 
 
 _SHUFFLE_RAISE_LOCK = threading.Lock()
@@ -524,13 +546,14 @@ def _raised_shuffle_partitions(spark, P: int):
                 spark.conf.set(conf_key, str(state[1]))
 
 
-def _edge_union_find(edge_rows) -> list[tuple[int, int]]:
-    """Exact union-find over a COLLECTED edge list (rows with doc_a /
-    doc_b): unions toward the smaller root so labels stay min-id, and
-    returns the sorted (node, root) list for every edge-touched node —
-    the shared driver-side kernel of ``duplicate_components``'
-    ``local_threshold`` path and ``duplicate_graph_quality``'s
-    component labels (one implementation, two callers)."""
+def _edge_union_find(edge_rows) -> list[tuple]:
+    """Exact union-find over a COLLECTED edge list (two-column rows,
+    either orientation, ids of any orderable type): unions toward the
+    smaller root so labels stay min-id, and returns the sorted
+    (node, root) list for every edge-touched node — the shared
+    driver-side kernel of
+    ``duplicate_components``' driver path and the graph diagnostics'
+    component labels (one implementation, several callers)."""
     parent: dict = {}
 
     def _find(x):
@@ -540,8 +563,7 @@ def _edge_union_find(edge_rows) -> list[tuple[int, int]]:
         return x
 
     touched: set = set()
-    for r in edge_rows:
-        a_, b_ = r["doc_a"], r["doc_b"]
+    for a_, b_ in edge_rows:
         touched.add(a_)
         touched.add(b_)
         ra, rb = _find(a_), _find(b_)
@@ -549,7 +571,7 @@ def _edge_union_find(edge_rows) -> list[tuple[int, int]]:
             # union toward the smaller root → labels stay min-id
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    return sorted((int(n), int(_find(n))) for n in touched)
+    return sorted((n, _find(n)) for n in touched)
 
 
 def duplicate_components(
@@ -558,10 +580,7 @@ def duplicate_components(
     threshold: float = 0.8,
     max_iterations: int = 25,
     pairs: DataFrame | None = None,
-    num_partitions: int | None = None,
-    algorithm: str = "label",
     stats: dict | None = None,
-    local_threshold: int = 0,
 ) -> DataFrame:
     """Connected components over the near-duplicate pair graph — the step
     after pair generation: pairs (a,b),(b,c) collapse into one duplicate
@@ -574,49 +593,31 @@ def duplicate_components(
     component step runs over LSH candidates with no all-pairs join
     anywhere. When pairs are injected the node universe is ALL of
     ``documents`` (no ``max_doc_id`` bound), and edges are SEMI-JOINED
-    against that universe first: the two algorithms agree only when
-    every pair endpoint is a known node (label propagation ignores
-    foreign endpoints; star would merge through them and could even
-    elect a foreign id as component_id), so edges touching unknown ids
-    are dropped rather than silently diverging.
+    against that universe first: star contraction would merge through
+    an unknown endpoint and could even elect a foreign id as
+    component_id, so edges touching unknown ids are dropped.
 
-    ``algorithm``:
-      * ``"label"`` — min-label propagation as a driver-controlled loop
-        of DataFrame joins; each iteration every node takes
-        min(own label, neighbors' labels); fixpoint after O(diameter)
-        rounds. Deterministic → DuckDB recursive-CTE oracle hash-checks
-        the registered query.
-      * ``"star"`` — alternating large-star/small-star (Kiveris et al.,
-        "Connected Components in MapReduce and Beyond", SoCC'14):
-        fixpoint in O(log d) rounds, the production choice for
-        long-diameter graphs. Same output contract.
+    Path, chosen from the edge count (``_driver_edges``): a graph with
+    fewer than ``_DRIVER_GRAPH_EDGES`` directed edge rows runs exact
+    UNION-FIND driver-side over the collected edges
+    (``stats["rounds"] = 0``); a larger one runs alternating
+    large-star/small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC'14) as a driver-controlled loop of
+    DataFrame joins — fixpoint in O(log d) rounds. Both publish the
+    same min-id labels, so the output does not depend on the path.
 
-    ``local_threshold`` (opt-in, 0 = off): when BOTH the edge list and
-    the node universe are smaller than the threshold, skip the
-    distributed fixpoint and run exact UNION-FIND driver-side — the
-    adaptive-locality endpoint (same move as the k-core local peel and
-    the one-job MMR rewrite). Output is identical by construction
-    (min-id component labels are unique), ``stats["rounds"] = 0``
-    marks the path taken. Callers that certify the bounded harness
-    feed opt in; the default keeps every fixpoint test on the
-    distributed loops, whose 100 TB story is unchanged.
-
-    ``num_partitions`` sizes every per-iteration frame; default derives
-    from the edge count (edge tables are node/edge-grain, small relative
-    to the corpus — task count should track THEM, not
-    spark.sql.shuffle.partitions). The loop's coalesce(P) can only
-    REDUCE partition counts, so when the derived P exceeds the session's
+    The loop sizes every per-round frame to P = ceil(edge_rows /
+    ``_COMPONENT_ROWS_PER_PARTITION``) partitions (edge tables are
+    node/edge-grain, small relative to the corpus — task count should
+    track THEM, not spark.sql.shuffle.partitions). coalesce(P) can only
+    REDUCE partition counts, so when P exceeds the session's
     spark.sql.shuffle.partitions the loop runs with that conf raised to
     P (restored via the reference-counted ``_raised_shuffle_partitions``
     — overlapping loops in one session restore the pre-raise value
-    exactly once, when the last one exits) — otherwise a 100 TB pair
-    graph's parallelism would silently stay capped at the shuffle
-    default. ``stats``
-    (optional dict) receives ``rounds`` / ``n_edges`` /
-    ``num_partitions`` for observability.
+    exactly once, when the last one exits). ``stats`` (optional dict)
+    receives ``rounds`` / ``n_edges`` / ``num_partitions`` for
+    observability.
     """
-    import math
-
     if pairs is None:
         pair_src = ngram_token_jaccard_pairs(documents, max_doc_id, threshold)
         nodes = documents.filter(F.col("doc_id") < max_doc_id)
@@ -630,23 +631,30 @@ def duplicate_components(
         ids_b = nodes.select(F.col("doc_id").alias("doc_b"))
         pair_df = pair_df.join(ids_a, "doc_a", "left_semi").join(ids_b, "doc_b", "left_semi")
     pair_df = pair_df.persist()
-    n_pairs = pair_df.count()
-    P = num_partitions or max(1, math.ceil(2 * n_pairs / _COMPONENT_ROWS_PER_PARTITION))
+    edges = pair_df.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).unionByName(pair_df.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+    edge_rows = _driver_edges(edges)
+    n_edges = len(edge_rows) if edge_rows is not None else edges.count()
+    P = _loop_partitions(n_edges)
     if stats is not None:
-        stats.update({"n_edges": 2 * n_pairs, "num_partitions": P})
-    if local_threshold and 2 * n_pairs < local_threshold:
-        # union-find over the EDGE-TOUCHED nodes only (bounded by the
-        # gate, never by the node universe — nothing node-grain is
-        # collected); singletons get their own id via the broadcast
-        # left join below, a map-only stage at any corpus size
-        labels = _edge_union_find(
-            pair_df.collect()  # bounded: < local_threshold edges
-        )
+        stats.update({"n_edges": n_edges, "num_partitions": P})
+    if edge_rows is not None:
+        # union-find over the EDGE-TOUCHED nodes only (nothing
+        # node-grain is collected); singletons get their own id via the
+        # broadcast left join below, a map-only stage at any corpus size
+        labels = _edge_union_find(edge_rows)
         if stats is not None:
             stats["rounds"] = 0
         pair_df.unpersist()
+        # ids keep the node type: string ids (entity names) are as valid
+        # as doc_ids, like on the star loop
+        id_type = nodes.schema["doc_id"].dataType
         labels_df = documents.sparkSession.createDataFrame(
-            labels, "doc_id long, label long"
+            labels,
+            T.StructType(
+                [T.StructField("doc_id", id_type), T.StructField("label", id_type)]
+            ),
         )
         return (
             nodes.select("doc_id")
@@ -659,20 +667,11 @@ def duplicate_components(
                 "is_canonical", F.col("doc_id") == F.col("component_id")
             )
         )
-    edges = (
-        pair_df.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(pair_df.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .coalesce(P)
-        .persist()
-    )
+    edges = edges.coalesce(P).persist()
     spark = documents.sparkSession
     try:
         with _raised_shuffle_partitions(spark, P):
-            if algorithm == "star":
-                return _components_star(nodes, edges, P, max_iterations, stats)
-            if algorithm != "label":
-                raise ValueError(f"unknown algorithm {algorithm!r}")
-            return _components_label_propagation(nodes, edges, P, max_iterations, stats)
+            return _components_star(nodes, edges, P, max_iterations, stats)
     finally:
         edges.unpersist()
         pair_df.unpersist()
@@ -704,64 +703,6 @@ def _release_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def _components_label_propagation(
-    nodes: DataFrame, edges: DataFrame, P: int, max_iterations: int, stats: dict | None
-) -> DataFrame:
-    """Min-label propagation loop; one row per node per round, lineage and
-    cache bounded by per-iteration persist/unpersist alternation."""
-    # per-round localCheckpoint (eager) — each round's plan references the
-    # previous labels frame TWICE (via neighbor_min and the left join), so
-    # without truncation the logical plan doubles per round: 2^rounds nodes
-    # put Catalyst analysis OOM around diameter ~12. Checkpointing keeps
-    # every round's plan O(1) and caches the round's rows in one job. The
-    # Catalyst-blinding caveat (RDD leaf hides stats) doesn't bite: both
-    # join sides are node/edge-grain frames already sized by `P`.
-    labels = nodes.select("doc_id", F.col("doc_id").alias("component_id")).coalesce(
-        P
-    ).localCheckpoint()
-    for rounds in range(1, max_iterations + 1):
-        neighbor_min = (
-            labels.join(edges, labels.doc_id == edges.src)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("component_id").alias("neighbor_component"))
-            .coalesce(P)
-        )
-        # carry the previous label through the checkpoint so convergence
-        # detection is a filter-count on the CACHED frame — no extra
-        # old-vs-new join job per round
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("component_id"),
-                    F.coalesce(F.col("neighbor_component"), F.col("component_id")),
-                ).alias("component_id"),
-                F.col("component_id").alias("prev_component_id"),
-            )
-            .coalesce(P)
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(
-            F.col("component_id") != F.col("prev_component_id")
-        ).count()
-        _release_checkpoint(labels)  # old round's blocks, no longer referenced
-        labels = new_labels.drop("prev_component_id")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(f"no fixpoint after {max_iterations} iterations")
-    if stats is not None:
-        stats["rounds"] = rounds
-    result = labels.select(
-        "doc_id",
-        "component_id",
-        (F.col("doc_id") == F.col("component_id")).alias("is_canonical"),
-    ).localCheckpoint()
-    _release_checkpoint(labels)
-    return result
-
-
 def _components_star(
     nodes: DataFrame, edges: DataFrame, P: int, max_iterations: int, stats: dict | None
 ) -> DataFrame:
@@ -772,12 +713,13 @@ def _components_star(
     every node u relinks its smaller neighbors (and itself) to the
     minimum. Both preserve connectivity; the composition contracts long
     paths geometrically, so fixpoint arrives in O(log d) rounds where
-    label propagation needs O(d). At fixpoint the edge set is a star
+    min-label propagation needs O(d). At fixpoint the edge set is a star
     forest rooted at each component's min node.
     """
-    # per-round localCheckpoint for the same reason as label propagation —
-    # each round's plan references `cur` several times (sym, mins, both
-    # star joins), so lineage grows ~5× per round without truncation
+    # per-round localCheckpoint (eager): each round's plan references
+    # `cur` several times (sym, mins, both star joins), so lineage grows
+    # ~5× per round without truncation and Catalyst analysis OOMs within
+    # a dozen rounds; checkpointing keeps every round's plan O(1)
     cur = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -1572,7 +1514,7 @@ def duplicate_cluster_sizes(documents: DataFrame) -> DataFrame:
     size. Component-grain then size-grain — both map-side combining;
     the heavy lifting (the components fixpoint) is the upstream
     operator, already O(log d)-bounded."""
-    comp = duplicate_components(documents, local_threshold=20_000)
+    comp = duplicate_components(documents)
     sizes = comp.groupBy("component_id").agg(F.count("*").alias("cluster_size"))
     totals = sizes.agg(F.sum("cluster_size").alias("n_docs"))
     return (
@@ -1654,8 +1596,8 @@ def duplicate_graph_quality(documents: DataFrame) -> DataFrame:
     every member of a ≥2 component touches an edge, so the
     singleton-labelling pass over the corpus contributed nothing but
     the scans. The labels now come straight from the same driver
-    union-find the fixpoint's ``local_threshold`` path runs
-    (``_edge_union_find`` — one implementation, two callers) over the
+    union-find ``duplicate_components``' driver path runs
+    (``_edge_union_find`` — one implementation, several callers) over the
     already-materialized harness pair feed, published as a BROADCAST
     local relation: documents scans 3 → 0, no component-subtree
     replays, output identical (verified exact at all three SFs)."""
@@ -1663,7 +1605,7 @@ def duplicate_graph_quality(documents: DataFrame) -> DataFrame:
     # the SAME pair relation feeds the component labels and the edge
     # metrics — the O(n²) token self-join runs once, not per consumer.
     # The collect is bounded by the harness feed's doc_id < 100 window
-    # (the same bound duplicate_components' local path collects under).
+    # (well under duplicate_components' _DRIVER_GRAPH_EDGES limit).
     comp = F.broadcast(
         documents.sparkSession.createDataFrame(
             _edge_union_find(pairs.collect()),
@@ -1788,7 +1730,6 @@ def pagerank_dup_graph(
     damping: float = 0.85,
     pairs: DataFrame | None = None,
     tol: float = 1e-4,
-    local_threshold: int = 0,
 ) -> DataFrame:
     """PageRank over the near-duplicate graph (Page et al. 1998 —
     public): which documents are the HUBS of duplication — the
@@ -1816,12 +1757,14 @@ def pagerank_dup_graph(
     uniform start); ``iterations`` caps the worst case — near-bipartite
     star components contract only at rate ``damping`` per round, and at
     the cap their rank ORDER (what the keep-policy consumes) is settled
-    even though last digits are not. Output precision by path: the
-    local (harness) path publishes UNROUNDED bit-deterministic ranks
-    (sorted folds — what the r16 oracle replays); the distributed path
-    rounds to 6dp because its groupBy-sum order makes the last ulp
-    nondeterministic across runs, and an unrounded publication would
-    not even be self-consistent. Convergence vs a pure-python
+    even though last digits are not.
+
+    Path, chosen from the edge count (``_driver_edges``): a graph with
+    fewer than ``_DRIVER_GRAPH_EDGES`` directed edge rows runs the same
+    power iteration driver-side and publishes UNROUNDED
+    bit-deterministic ranks; a larger graph runs the distributed loop,
+    which rounds to 6dp because its groupBy-sum order makes the last
+    ulp nondeterministic across runs. Convergence vs a pure-python
     power-method reference and the rank-mass ≈ 1 invariant are tested
     (tests/test_llm.py::test_pagerank_matches_pure_python_reference).
 
@@ -1830,12 +1773,12 @@ def pagerank_dup_graph(
     persisted LSH band index as components (tested); the default is the
     harness-bounded exact-Jaccard verifier.
 
-    Oracle-backed since r16: the harness (local) path is
-    bit-deterministic — sorted-neighbor left folds, computed 1−d,
-    unrounded ranks — so a DuckDB list-state recursive CTE replays the
-    whole float recursion INCLUDING the adaptive delta cadence and
-    hash-matches exactly; the distributed path keeps engine-ordered
-    sums (last-ulp nondeterminism, covered by the 2e-6 parity band)."""
+    Oracle-backed: the driver path is bit-deterministic —
+    sorted-neighbor left folds, computed 1−d, unrounded ranks — so a
+    DuckDB list-state recursive CTE replays the whole float recursion
+    INCLUDING the adaptive delta cadence and hash-matches exactly; the
+    distributed path keeps engine-ordered sums (last-ulp
+    nondeterminism, covered by the 2e-6 parity band)."""
     if pairs is None:
         pairs = _harness_pair_feed(documents)
     edges = pairs.select(
@@ -1846,35 +1789,30 @@ def pagerank_dup_graph(
     # pair-generation join from the raw scan (measured 30×: ~17 s for a
     # 60-node harness graph; checkpointed: the pair join is paid once)
     edges = edges.localCheckpoint()
-    nodes = edges.select(F.col("src").alias("doc_id")).distinct().localCheckpoint()
-    n_nodes = nodes.count()  # bounded: verifier-harness graph
+    edge_rows = _driver_edges(edges)
+    if edge_rows is None:
+        nodes = edges.select(F.col("src").alias("doc_id")).distinct().localCheckpoint()
+        n_nodes = nodes.count()
+    else:
+        n_nodes = len({r["src"] for r in edge_rows})
     if n_nodes == 0:
         # empty pair graph (e.g. nothing clears the Jaccard threshold):
         # zero-row frame with the contract schema, doc_id type preserved
-        return nodes.limit(0).withColumn(
+        return edges.select(F.col("src").alias("doc_id")).limit(0).withColumn(
             "pagerank", F.lit(None).cast("double")
         )
-    if local_threshold and n_nodes < local_threshold:
-        # adaptive-locality ENDPOINT (opt-in, same rule as the k-core
-        # local peel and components union-find): below the threshold
-        # the edge list is driver-bounded by construction and the
-        # distributed loop's cost is ~2 scheduler jobs per round on
-        # micro-data. Identical update rule AND identical stopping
+    if edge_rows is not None:
+        # driver path: identical update rule AND identical stopping
         # CADENCE (delta measured every third round until last_delta
-        # < 10·tol, exactly like the distributed loop below) — both
-        # paths therefore run the same number of power iterations.
-        # BIT-DETERMINISTIC since r16 (the fold toolbox): neighbor
-        # lists are SORTED and every sum is an explicit 0.0-init left
-        # fold in that order, 1-damping stays the computed subtraction,
-        # and ranks publish UNROUNDED — so the DuckDB list-state
-        # recursive CTE replays this path hash-exactly, including the
-        # adaptive delta cadence. The ≥ threshold path keeps the
-        # shuffle-partitioned loop (engine-ordered sums, last-ulp
-        # nondeterminism — the parity test's 2e-6 band covers it); the
-        # 100 TB story is unchanged.
+        # < 10·tol, exactly like the distributed loop below), so both
+        # paths run the same number of power iterations. Neighbor lists
+        # are SORTED and every sum is an explicit 0.0-init left fold in
+        # that order, 1-damping stays the computed subtraction, and
+        # ranks publish UNROUNDED — the DuckDB list-state recursive CTE
+        # replays this path hash-exactly.
         adj: dict = {}
         outdeg: dict = {}
-        for r in edges.collect():  # bounded: < local_threshold nodes
+        for r in edge_rows:
             adj.setdefault(r["dst"], []).append(r["src"])
             outdeg[r["src"]] = outdeg.get(r["src"], 0) + 1
         for u in adj:
@@ -1906,15 +1844,12 @@ def pagerank_dup_graph(
         return edges.sparkSession.createDataFrame(
             rows, "doc_id long, pagerank double"
         )
-    if n_nodes < 10_000:
-        # adaptive locality (the AQE coalesce principle applied to the
-        # loop): a bounded graph pays ~30 rounds × 32-partition shuffle
-        # scheduling for micro-data — collapse the loop state to one
-        # partition (measured 16 s → ~3 s on the 60-node harness). A
-        # band-index-fed corpus graph above the threshold keeps its
-        # native partitioning and the edge-grain shuffle scale story.
-        edges = edges.coalesce(1).localCheckpoint()
-        nodes = nodes.coalesce(1).localCheckpoint()
+    # loop state sized by the edge count, like duplicate_components: a
+    # graph just over the driver limit runs single-task instead of
+    # paying a spark.sql.shuffle.partitions-wide shuffle per round
+    P = _loop_partitions(edges.count())
+    edges = edges.coalesce(P).localCheckpoint()
+    nodes = nodes.coalesce(P).localCheckpoint()
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).localCheckpoint()
     ranks = nodes.select("doc_id", F.lit(1.0 / n_nodes).alias("rank"))
     ranks = ranks.localCheckpoint()
@@ -2005,7 +1940,6 @@ def kcore_decomposition(
     documents: DataFrame,
     pairs: DataFrame | None = None,
     max_k: int = 20,
-    local_threshold: int = 0,
 ) -> DataFrame:
     """Coreness of every node in the near-dup graph (Seidman 1983
     k-cores; Batagelj–Zaveršnik is the sequential peel this mirrors in
@@ -2022,7 +1956,10 @@ def kcore_decomposition(
     ``localCheckpoint`` + release keeps the plan flat (the
     duplicate_components fixpoint discipline), and the driver sees one
     count per pass (bounded). Peeling stops when the graph empties or
-    ``max_k`` caps pathological density. Oracle-backed since r16:
+    ``max_k`` caps pathological density. A graph with fewer than
+    ``_DRIVER_GRAPH_EDGES`` directed edge rows (``_driver_edges``) runs
+    the exact sequential Batagelj–Zaveršnik peel driver-side instead,
+    with the same k-ascending semantics and ``max_k`` cap. Oracle-backed:
     coreness is peel-ORDER-INVARIANT, so a DuckDB list-state recursive
     CTE replays the peel over the certified exact-Jaccard pair feed and
     hash-matches exactly (the peel-jump here is a pure optimization the
@@ -2038,26 +1975,12 @@ def kcore_decomposition(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     edges = edges.localCheckpoint()
-    # nodes tracked SEPARATELY from edges: a node whose neighbors all
-    # peel away loses every edge but must still receive a coreness at
-    # the current k (degree 0 < k), not silently vanish
-    nodes = (
-        edges.select(F.col("src").alias("doc_id")).distinct().localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    if local_threshold and n_nodes < local_threshold:
-        # adaptive-locality ENDPOINT (opt-in, the principle behind the
-        # coalesce(1) rule taken to its conclusion — same move the
-        # MMR re-ranker made): below the threshold the whole edge
-        # list is driver-bounded BY CONSTRUCTION, and the peel's cost
-        # in the distributed loop is ~4 scheduler jobs per pass on
-        # micro-data, not computation. Run the exact sequential
-        # Batagelj–Zaveršnik peel driver-side (identical k-ascending
-        # semantics incl. the max_k cap) and ship the result back as
-        # one DataFrame. The ≥ threshold path below keeps the
-        # shuffle-partitioned peel — the 100 TB story is unchanged.
+    edge_rows = _driver_edges(edges)
+    if edge_rows is not None:
+        # driver path: the peel's cost in the distributed loop is ~4
+        # scheduler jobs per pass on a graph this small, not computation
         adj: dict = {}
-        for r in edges.collect():  # bounded: < local_threshold nodes
+        for r in edge_rows:
             adj.setdefault(r["src"], set()).add(r["dst"])
         live, core, k = set(adj), {}, 0
         while live and k < max_k:
@@ -2081,12 +2004,17 @@ def kcore_decomposition(
         return edges.sparkSession.createDataFrame(
             [(int(d), int(c)) for d, c in rows], "doc_id long, coreness long"
         )
-    # bounded-graph locality, same rule as pagerank_dup_graph: the
-    # peel loop's many small passes should not each pay a
-    # 32-partition shuffle on micro-data
-    if n_nodes < 10_000:
-        edges = edges.coalesce(1).localCheckpoint()
-        nodes = nodes.coalesce(1).localCheckpoint()
+    # loop state sized by the edge count, same rule as
+    # pagerank_dup_graph: the peel's many small passes should not each
+    # pay a spark.sql.shuffle.partitions-wide shuffle
+    P = _loop_partitions(edges.count())
+    edges = edges.coalesce(P).localCheckpoint()
+    # nodes tracked SEPARATELY from edges: a node whose neighbors all
+    # peel away loses every edge but must still receive a coreness at
+    # the current k (degree 0 < k), not silently vanish
+    nodes = (
+        edges.select(F.col("src").alias("doc_id")).distinct().coalesce(P).localCheckpoint()
+    )
     # accumulates (doc_id, k) as nodes peel out
     coreness = nodes.select("doc_id", F.lit(0).alias("coreness")).limit(0)
     k = 1
@@ -2172,23 +2100,20 @@ def canonical_keep_policy(documents: DataFrame) -> DataFrame:
     pairs = ngram_token_jaccard_pairs(documents, 100, 0.8).select(
         "doc_a", "doc_b"
     ).localCheckpoint()  # ONE pair-generation join feeds both upstreams
-    # r21 (the duplicate_graph_quality move): the report covers
-    # CLUSTERS (n_members > 1), and every member of a ≥2 component
-    # touches an edge — so the all-docs node universe the full
-    # duplicate_components call labels contributed ONLY its documents
-    # scan (executed census: the query's last remaining scan).
-    # Component labels come straight from the shared driver union-find
-    # over the materialized pair feed (bounded by the harness window,
-    # the same collect the components local_threshold path ran),
-    # broadcast: scans 1 → 0, output identical (singletons never
-    # survived the filter), −14% wall at sf0.1.
+    # the report covers CLUSTERS (n_members > 1), and every member of
+    # a ≥2 component touches an edge — so the all-docs node universe
+    # the full duplicate_components call labels contributed ONLY its
+    # documents scan. Component labels come straight from the shared
+    # driver union-find over the materialized pair feed (bounded by the
+    # harness window), broadcast: no documents scan, output identical
+    # (singletons never survived the filter).
     comp = F.broadcast(
         documents.sparkSession.createDataFrame(
             _edge_union_find(pairs.collect()),
             "doc_id long, component_id long",
         )
     )
-    ranks = pagerank_dup_graph(documents, pairs=pairs, local_threshold=10_000)
+    ranks = pagerank_dup_graph(documents, pairs=pairs)
     joined = comp.join(ranks, "doc_id", "left").select(
         "doc_id",
         "component_id",
@@ -2731,7 +2656,7 @@ def cluster_source_purity(documents: DataFrame) -> DataFrame:
     (ties break by count DESC then source ASC); no float surface."""
     from pyspark.sql import Window as W
 
-    comp = duplicate_components(documents, local_threshold=20_000)
+    comp = duplicate_components(documents)
     members = comp.select("doc_id", "component_id").join(
         documents.select("doc_id", "source"), "doc_id"
     )
@@ -2849,8 +2774,8 @@ def fuzzy_entity_clusters(part: DataFrame, max_dist: int = 4) -> DataFrame:
     and coverage counts.
 
     Reuses the generic component engine (:func:`duplicate_components` —
-    its min-label star loop is type-agnostic, so name strings ride
-    through unchanged); the quadratic stage stays at the blocked
+    both its paths, driver union-find and star loop, are type-agnostic,
+    so name strings ride through unchanged); the quadratic stage stays at the blocked
     vocabulary grain of the pair generator. Single-spelling entities
     are excluded (they need no resolution and would make the output
     vocabulary-sized).
@@ -2895,7 +2820,6 @@ def lpa_communities(
     documents: DataFrame,
     pairs: DataFrame | None = None,
     max_iterations: int = 10,
-    local_threshold: int = 0,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan,
     Albert & Kumara 2007) over the near-duplicate graph — where
@@ -2921,15 +2845,12 @@ def lpa_communities(
 
     Output: one row per community — label, n_members, min/max member.
 
-    ``local_threshold``: when the (bidirectional) edge list is smaller
-    than this, run the IDENTICAL synchronous rounds driver-side over
-    the collected edges (the kcore/components opt-in discipline —
-    same update rule, same tie-break, so labels match the distributed
-    loop exactly; pinned by the parity test); 0 keeps the distributed
-    fixpoint.
+    A graph with fewer than ``_DRIVER_GRAPH_EDGES`` directed edge rows
+    (``_driver_edges``) runs the IDENTICAL synchronous rounds
+    driver-side over the collected edges — same update rule, same
+    tie-break, so labels match the distributed loop exactly (pinned by
+    the parity test).
     """
-    import math
-
     if pairs is None:
         pairs = _harness_pair_feed(documents)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
@@ -2939,40 +2860,38 @@ def lpa_communities(
 
     labels = None
     try:
-        if local_threshold:
-            edge_rows = edges.limit(local_threshold).collect()
-            if len(edge_rows) < local_threshold:
-                adj: dict = {}
-                for r in edge_rows:
-                    adj.setdefault(r["src"], []).append(r["dst"])
-                lab = {n: n for n in adj}
-                for _ in range(max_iterations):
-                    new = {}
-                    for n in adj:
-                        counts: dict = {}
-                        for m in adj[n]:
-                            counts[lab[m]] = counts.get(lab[m], 0) + 1
-                        new[n] = sorted(
-                            counts.items(), key=lambda kv: (-kv[1], kv[0])
-                        )[0][0]
-                    if new == lab:
-                        break
-                    lab = new
-                comm: dict = {}
-                for n, c in lab.items():
-                    comm.setdefault(c, []).append(n)
-                spark = edges.sparkSession
-                return spark.createDataFrame(
-                    sorted(
-                        (c, len(m), min(m), max(m)) for c, m in comm.items()
-                    ),
-                    "community_id long, n_members long, min_member long, max_member long",
-                )
+        edge_rows = _driver_edges(edges)
+        if edge_rows is not None:
+            adj: dict = {}
+            for r in edge_rows:
+                adj.setdefault(r["src"], []).append(r["dst"])
+            lab = {n: n for n in adj}
+            for _ in range(max_iterations):
+                new = {}
+                for n in adj:
+                    counts: dict = {}
+                    for m in adj[n]:
+                        counts[lab[m]] = counts.get(lab[m], 0) + 1
+                    new[n] = sorted(
+                        counts.items(), key=lambda kv: (-kv[1], kv[0])
+                    )[0][0]
+                if new == lab:
+                    break
+                lab = new
+            comm: dict = {}
+            for n, c in lab.items():
+                comm.setdefault(c, []).append(n)
+            spark = edges.sparkSession
+            return spark.createDataFrame(
+                sorted(
+                    (c, len(m), min(m), max(m)) for c, m in comm.items()
+                ),
+                "community_id long, n_members long, min_member long, max_member long",
+            )
         # per-iteration frames sized by the EDGE count, exactly like
         # duplicate_components — a hardcoded tiny coalesce would
         # serialize the loop under an at-scale LSH pair feed
-        n_edges = edges.count()
-        P = max(1, math.ceil(n_edges / _COMPONENT_ROWS_PER_PARTITION))
+        P = _loop_partitions(edges.count())
         nodes = edges.select(F.col("src").alias("doc_id")).distinct()
         labels = nodes.select("doc_id", F.col("doc_id").alias("label")).coalesce(
             P
@@ -3256,7 +3175,6 @@ def closeness_centrality(
     documents: DataFrame,
     pairs: DataFrame | None = None,
     max_rounds: int = 128,
-    local_threshold: int = 0,
 ) -> DataFrame:
     """Closeness centrality + eccentricity of every node in the
     near-dup graph (Bavelas 1950 / Sabidussi 1966 closeness; Freeman
@@ -3277,7 +3195,9 @@ def closeness_centrality(
     harness feed V ≤ 100 by construction; at scale this runs per
     bounded component/cluster (the keep-policy consumer's grain, never
     the whole corpus), with ``pairs=`` wired to the persisted band
-    index like every other graph diagnostic.
+    index like every other graph diagnostic. A graph with fewer than
+    ``_DRIVER_GRAPH_EDGES`` directed edge rows (``_driver_edges``) runs
+    the same BFS driver-side over the collected edges.
 
     Output per node: reachable-set size, eccentricity (max BFS dist),
     total distance, and within-component closeness
@@ -3292,25 +3212,17 @@ def closeness_centrality(
             pairs.select(F.col("doc_b").alias("e_src"), F.col("doc_a").alias("e_dst"))
         )
     )
-    nodes = edges.select(F.col("e_src").alias("doc_id")).distinct()
-    n_nodes = nodes.count()
-    if local_threshold and n_nodes < local_threshold:
-        # adaptive-locality ENDPOINT (opt-in, the kcore/MMR rule): below
-        # the threshold the edge list is driver-bounded BY CONSTRUCTION
-        # and the distributed loop's cost is ~4 scheduler jobs per
-        # diameter round on micro-data, not computation (2.2 s → 0.6 s
-        # on the sf0.1 harness graph, measured). Identical output by
-        # construction: every quantity is an exact integer until the one
-        # final division, rounded HALF_UP exactly as Spark's round()
-        # (BigDecimal of the shortest double repr) — the path choice can
-        # never flip a bit. The ≥ threshold path below keeps the
-        # shuffle-partitioned BFS — the 100 TB story (per bounded
-        # component, pairs= from the band index) is unchanged.
+    edge_rows = _driver_edges(edges)
+    if edge_rows is not None:
+        # driver path (2.2 s → 0.6 s on the sf0.1 harness graph): every
+        # quantity is an exact integer until the one final division,
+        # rounded HALF_UP exactly as Spark's round() (BigDecimal of the
+        # shortest double repr) — the path choice can never flip a bit
         from collections import deque
         from decimal import ROUND_HALF_UP, Decimal
 
         adj: dict = {}
-        for r in edges.collect():  # bounded: < local_threshold nodes
+        for r in edge_rows:
             adj.setdefault(r["e_src"], set()).add(r["e_dst"])
         out = []
         for s0 in adj:
@@ -3341,11 +3253,12 @@ def closeness_centrality(
             "doc_id long, n_reachable long, eccentricity long, "
             "sum_dist long, closeness double",
         )
-    if n_nodes < 10_000:  # bounded-graph locality, the kcore rule
-        edges = edges.coalesce(1)
-        nodes = nodes.coalesce(1)
-    edges = edges.localCheckpoint()
-    nodes = nodes.localCheckpoint()
+    # loop state sized by the edge count, the kcore rule
+    P = _loop_partitions(edges.count())
+    edges = edges.coalesce(P).localCheckpoint()
+    nodes = (
+        edges.select(F.col("e_src").alias("doc_id")).distinct().coalesce(P).localCheckpoint()
+    )
 
     dist = nodes.select(
         F.col("doc_id").alias("src"),
@@ -3373,10 +3286,10 @@ def closeness_centrality(
             _release_checkpoint(prev_frontier)
         _release_checkpoint(prev_dist)
         frontier = new
-    # exit-path hygiene (r16 review-pass find): edges, nodes and the
-    # final frontier are dead once the fixpoint closes — release their
-    # blocks now instead of waiting for ContextCleaner GC. `dist`
-    # stays: the returned (lazy) aggregate reads it.
+    # exit-path hygiene: edges, nodes and the final frontier are dead
+    # once the fixpoint closes — release their blocks now instead of
+    # waiting for ContextCleaner GC. `dist` stays: the returned (lazy)
+    # aggregate reads it.
     _release_checkpoint(edges)
     _release_checkpoint(nodes)
     if frontier is not dist:
@@ -3386,7 +3299,7 @@ def closeness_centrality(
         F.max("dist").cast("long").alias("eccentricity"),
         F.sum("dist").cast("long").alias("sum_dist"),
         # NULL (not NaN) when sum_dist == 0 — a node whose edges are
-        # all self-loops; mirrors the local path's guard
+        # all self-loops; mirrors the driver path's guard
         F.when(
             F.sum("dist") > 0,
             F.round(
@@ -3402,7 +3315,6 @@ def betweenness_centrality(
     documents: DataFrame,
     pairs: DataFrame | None = None,
     max_rounds: int = 128,
-    local_threshold: int = 0,
 ) -> DataFrame:
     """Shortest-path betweenness centrality (Freeman 1977; Brandes 2001
     is the standard algorithm reference — public) of every node in the
@@ -3434,7 +3346,11 @@ def betweenness_centrality(
     6dp (each term is a ratio of exact integers; the sum publishes
     under the repo's 6dp absorption discipline). The DuckDB oracle
     recomputes σ independently by enumerating the shortest-path DAG
-    (finite: level-strict edges) and hash-matches both columns."""
+    (finite: level-strict edges) and hash-matches both columns.
+
+    A graph with fewer than ``_DRIVER_GRAPH_EDGES`` directed edge rows
+    (``_driver_edges``) runs the same BFS, σ level-DP and pair-sum
+    driver-side over the collected edges."""
     if pairs is None:
         pairs = _harness_pair_feed(documents)
     edges = (
@@ -3443,23 +3359,17 @@ def betweenness_centrality(
             pairs.select(F.col("doc_b").alias("e_src"), F.col("doc_a").alias("e_dst"))
         )
     )
-    nodes = edges.select(F.col("e_src").alias("doc_id")).distinct()
-    n_nodes = nodes.count()
-    if local_threshold and n_nodes < local_threshold:
-        # adaptive-locality ENDPOINT (opt-in, the closeness rule):
-        # below the threshold the edge list is driver-bounded BY
-        # CONSTRUCTION; the distributed fixpoint's cost on micro-data
-        # is scheduler rounds, not computation (2.24 s → sub-second on
-        # the sf0.1 harness graph, the closeness measurement class).
-        # Same math by construction: BFS + σ level-DP in exact ints,
-        # then the IDENTICAL pair-sum closed form — the float sum is
-        # the same 6dp-absorption class as the distributed groupBy and
-        # the oracle (no engine sums doubles in a canonical order).
+    edge_rows = _driver_edges(edges)
+    if edge_rows is not None:
+        # driver path: BFS + σ level-DP in exact ints, then the
+        # IDENTICAL pair-sum closed form — the float sum is the same
+        # 6dp-absorption class as the distributed groupBy and the
+        # oracle (no engine sums doubles in a canonical order)
         from collections import deque
         from decimal import ROUND_HALF_UP, Decimal
 
         adj: dict = {}
-        for r in edges.collect():  # bounded: < local_threshold nodes
+        for r in edge_rows:
             adj.setdefault(r["e_src"], set()).add(r["e_dst"])
         sp_loc: dict = {}
         for s0 in adj:
@@ -3499,11 +3409,12 @@ def betweenness_centrality(
         return edges.sparkSession.createDataFrame(
             out, "doc_id long, n_mid_pairs long, betweenness double"
         )
-    if n_nodes < 10_000:  # bounded-graph locality, the kcore rule
-        edges = edges.coalesce(1)
-        nodes = nodes.coalesce(1)
-    edges = edges.localCheckpoint()
-    nodes = nodes.localCheckpoint()
+    # loop state sized by the edge count, the kcore rule
+    P = _loop_partitions(edges.count())
+    edges = edges.coalesce(P).localCheckpoint()
+    nodes = (
+        edges.select(F.col("e_src").alias("doc_id")).distinct().coalesce(P).localCheckpoint()
+    )
 
     # (src, node, dist, sigma): BFS levels with path-count DP
     sp = nodes.select(

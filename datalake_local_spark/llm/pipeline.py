@@ -126,7 +126,6 @@ def prepare_corpus(
         components = dedup.duplicate_components(
             survivors,
             pairs=dedup.minhash_lsh_candidates(survivors),
-            algorithm="star",
             stats=stats,
         )
         nd_keep = components.filter(F.col("is_canonical")).select(
@@ -325,7 +324,6 @@ def pretraining_mixture(
         components = dedup.duplicate_components(
             survivors,
             pairs=dedup.minhash_lsh_candidates(survivors),
-            algorithm="star",
             stats=stats,
         )
         nd_keep = components.filter(F.col("is_canonical")).select(
@@ -812,9 +810,7 @@ def weighted_reservoir_sample(documents: DataFrame, k: int = 100) -> DataFrame:
     return keyed.orderBy(F.col("es_key").desc(), "doc_id").limit(k)
 
 
-def dedup_funnel_report(
-    documents: DataFrame, max_doc_id: int = 100, local_threshold: int = 0
-) -> DataFrame:
+def dedup_funnel_report(documents: DataFrame, max_doc_id: int = 100) -> DataFrame:
     """Stage-by-stage dedup impact funnel: the before/after table a
     pipeline owner reads to see WHERE the corpus shrinks — stage 1
     EXACT (md5 of normalized text, keep min doc_id per digest), stage
@@ -827,10 +823,7 @@ def dedup_funnel_report(
 
     Bounded to the harness doc slice like every exact-Jaccard
     verifier; at scale stage 2's pair feed is the banded LSH index and
-    the funnel shape is unchanged. ``local_threshold`` forwards to the
-    component engine's opt-in driver-local union-find (the blessed
-    bounded-graph fast path — identical labels by construction).
-    All-integer output."""
+    the funnel shape is unchanged. All-integer output."""
     from datalake_local_spark.llm import dedup as dd
 
     docs = documents.filter(F.col("doc_id") < max_doc_id)
@@ -847,12 +840,7 @@ def dedup_funnel_report(
     pairs = dd.ngram_token_jaccard_pairs(surv_docs, max_doc_id, 0.8).select(
         "doc_a", "doc_b"
     )
-    comps = dd.duplicate_components(
-        surv_docs.select("doc_id"),
-        pairs=pairs,
-        algorithm="star",
-        local_threshold=local_threshold,
-    )
+    comps = dd.duplicate_components(surv_docs.select("doc_id"), pairs=pairs)
     n_near = comps.select("component_id").distinct().count()
     spark = documents.sparkSession
     rows = [
@@ -872,7 +860,6 @@ def leakage_safe_split(
     documents: DataFrame,
     max_doc_id: int = 100,
     fractions: dict[str, float] | None = None,
-    local_threshold: int = 0,
 ) -> DataFrame:
     """Leakage-safe train/val/test assignment: the split key is the
     NEAR-DUP CLUSTER's canonical representative, not the document —
@@ -888,8 +875,7 @@ def leakage_safe_split(
     IS the cluster) so the certification proves the property, not
     just the counts. Bounded to the harness doc slice like every
     exact-Jaccard consumer; at scale the pair feed is the banded
-    index; ``local_threshold`` forwards to the component engine's
-    opt-in bounded-graph fast path."""
+    index."""
     from datalake_local_spark.llm import dedup as dd
 
     fractions = (
@@ -897,9 +883,9 @@ def leakage_safe_split(
         if fractions is not None
         else {"train": 0.90, "val": 0.05, "test": 0.05}
     )
-    comps = dd.duplicate_components(
-        documents, max_doc_id=max_doc_id, local_threshold=local_threshold
-    ).select("doc_id", "component_id")
+    comps = dd.duplicate_components(documents, max_doc_id=max_doc_id).select(
+        "doc_id", "component_id"
+    )
     assigned = comps.select(
         "doc_id",
         "component_id",

@@ -700,8 +700,8 @@ def semantic_dedup(
        decomposition (``_semantic_cluster_pairs``): per-task memory is
        bounded by ``max_block_rows`` regardless of cluster size, so a
        hot cluster fans out to more tasks instead of OOMing one;
-    3. pairs → star connected components (O(log d) rounds) → keep each
-       component's min vec_id.
+    3. pairs → connected components (driver union-find or O(log d)
+       star rounds, by edge count) → keep each component's min vec_id.
 
     Returns (vec_id, component_id, is_canonical). Pairs FOUND are
     exact; recall is bounded by the clustering (a near-dup pair split
@@ -713,7 +713,7 @@ def semantic_dedup(
     assigned, _centers = _ivf_index(embeddings, n_centroids, seed)
     pairs = _semantic_cluster_pairs(assigned, threshold, max_block_rows)
     nodes = embeddings.select(F.col("vec_id").alias("doc_id"))
-    comps = dedup_mod.duplicate_components(nodes, pairs=pairs, algorithm="star")
+    comps = dedup_mod.duplicate_components(nodes, pairs=pairs)
     return comps.select(
         F.col("doc_id").alias("vec_id"), "component_id", "is_canonical"
     )

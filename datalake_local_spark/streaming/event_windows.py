@@ -15,6 +15,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def _stream_session(spark: SparkSession, shuffle_partitions: str = "2") -> SparkSession:
@@ -48,6 +49,35 @@ def _stream_session(spark: SparkSession, shuffle_partitions: str = "2") -> Spark
     sub.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     sub.conf.set("spark.sql.session.timeZone", "UTC")
     return sub
+
+
+def _run_available_now(
+    writer: DataStreamWriter, timeout: float = 120, checkpoint_dir: str | None = None
+) -> None:
+    """Run a configured stream writer (sink, output mode, query name) over
+    its whole input — ``trigger(availableNow=True)`` with a checkpoint in
+    ``checkpoint_dir`` (a fresh temporary directory by default) — and
+    wait for it to finish. The query is stopped either way. A query that
+    has not finished after ``timeout`` seconds raises TimeoutError: its
+    sink holds a partial result, which must never be returned as the
+    answer. A query that failed re-raises its failure
+    (``awaitTermination`` throws the StreamingQueryException)."""
+    ckpt_ctx = (
+        tempfile.TemporaryDirectory()
+        if checkpoint_dir is None
+        else contextlib.nullcontext(checkpoint_dir)
+    )
+    with ckpt_ctx as ckpt:
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        try:
+            finished = q.awaitTermination(timeout)
+        finally:
+            q.stop()
+        if not finished:
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not finish within "
+                f"{timeout} s; its sink holds a partial result"
+            )
 
 
 def _open_events_stream(sub: SparkSession, sf_dir: str, glob: str = "events.parquet") -> DataFrame:
@@ -177,17 +207,11 @@ def run_streaming_sessionize(
         )
         .select("user_id", "n_events", "session_start", "session_end", "session_value")
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 
@@ -266,17 +290,11 @@ def run_streaming_session_dynamic_gap(
             "session_value",
         )
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 
@@ -314,17 +332,11 @@ def run_streaming_stateful_counter(
     out = stream.groupBy("user_id").applyInPandasWithState(
         update, output_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        out.writeStream.outputMode("update")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 
@@ -388,17 +400,11 @@ def run_streaming_transform_with_state(
         outputMode="Update",
         timeMode="None",
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        out.writeStream.outputMode("update")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 
@@ -420,17 +426,11 @@ def run_streaming_sliding(
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("win.start").alias("win_start"), "n_events", "sum_value")
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 
@@ -451,17 +451,11 @@ def run_streaming_dedup(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        deduped.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 
@@ -542,17 +536,12 @@ def run_streaming_semi_join(
     joined = clicks.join(
         purchases, _interval_join_cond(within_minutes), "left_semi"
     ).select("click_id", F.col("c_user").alias("user_id"), "click_ts")
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        q.stop()
+    _run_available_now(
+        joined.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+        timeout=180,
+    )
     return sub.table(query_name)
 
 
@@ -589,17 +578,12 @@ def run_streaming_outer_join(
         "purchase_id",
         F.col("purchase_id").isNotNull().alias("converted"),
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        q.stop()
+    _run_available_now(
+        joined.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+        timeout=180,
+    )
     return sub.table(query_name)
 
 
@@ -634,17 +618,12 @@ def run_streaming_full_outer_join(
         "purchase_id",
         "purchase_ts",
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        q.stop()
+    _run_available_now(
+        joined.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+        timeout=180,
+    )
     return sub.table(query_name)
 
 
@@ -687,17 +666,12 @@ def run_streaming_right_outer_join(
         "click_ts",
         F.col("click_id").isNotNull().alias("attributed"),
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        q.stop()
+    _run_available_now(
+        joined.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+        timeout=180,
+    )
     return sub.table(query_name)
 
 
@@ -730,17 +704,12 @@ def run_streaming_stream_join(
     joined = clicks.join(
         purchases, _interval_join_cond(within_minutes)
     ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        q.stop()
+    _run_available_now(
+        joined.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+        timeout=180,
+    )
     return sub.table(query_name)
 
 
@@ -768,17 +737,11 @@ def run_streaming_static_enrich(
         .groupBy("c_mktsegment", "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 
@@ -844,20 +807,9 @@ def run_streaming_foreachbatch_upsert(
         )
         overwrite_changed_partitions(ss, full_name, combined.localCheckpoint(), "bucket")
 
-    ckpt_ctx = (
-        tempfile.TemporaryDirectory()
-        if checkpoint_dir is None
-        else contextlib.nullcontext(checkpoint_dir)
+    _run_available_now(
+        stream.writeStream.foreachBatch(upsert_batch), checkpoint_dir=checkpoint_dir
     )
-    with ckpt_ctx as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
     return sub.table(full_name).select(
         "user_id", "n_events", F.round("raw_value", 2).alias("total_value")
     )
@@ -877,17 +829,11 @@ def run_streaming_tumbling(
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("win.start").alias("win_start"), "event_type", "n_events", "sum_value")
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 
@@ -950,16 +896,10 @@ def run_streaming_trending(
             last_ranked.pop().unpersist()
         last_ranked.append(ranked)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            counts.writeStream.outputMode("complete")
-            .foreachBatch(rank_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        counts.writeStream.outputMode("complete")
+        .foreachBatch(rank_batch),
+    )
     out = sub.table(f"global_temp.{view}")
     if last_ranked:
         # materialize the final answer, then release the last batch's
@@ -1009,17 +949,11 @@ def run_streaming_two_level_agg(
             F.col("total_n").cast("long").alias("total_n"),
         )
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            lvl2.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        lvl2.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 
@@ -1071,17 +1005,12 @@ def run_streaming_join_then_window(
             F.col("n_matches").cast("long").alias("n_matches"),
         )
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agged.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        q.stop()
+    _run_available_now(
+        agged.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+        timeout=180,
+    )
     return sub.table(query_name)
 
 
@@ -1202,17 +1131,11 @@ def run_streaming_anomaly(
     out = stream.groupBy("user_id").applyInPandasWithState(
         update, output_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _run_available_now(
+        out.writeStream.outputMode("update")
+        .format("memory")
+        .queryName(query_name),
+    )
     return sub.table(query_name)
 
 

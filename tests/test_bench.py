@@ -172,3 +172,23 @@ def test_bench_summary_carries_normalized_and_control_drift_fields():
     for key in ("normalized_vs_prev", "nvp_prev", "control_start", "control_end"):
         assert key in rec, key
     assert len(rec["control_start"]) == 2 and len(rec["control_end"]) == 2
+
+
+def test_bench_base_is_the_highest_integer_round(tmp_path):
+    """The comparison base is the artifact of the highest ROUND, not the
+    lexically last file name: as strings, BENCH_r100 sorts before
+    BENCH_r21 and BENCH_r10 before BENCH_r9. Suffixed artifacts (another
+    env) are never a base."""
+    import importlib.util
+
+    for name in ("BENCH_r9.json", "BENCH_r100.json", "BENCH_r10.json",
+                 "BENCH_r21.json", "BENCH_r21_c8.json", "BENCH_local.json"):
+        (tmp_path / name).write_text("{}")
+    spec = importlib.util.spec_from_file_location(
+        "bench_under_test", os.path.join(REPO, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    arts = [os.path.basename(p) for p in bench._round_artifacts(str(tmp_path))]
+    assert arts == ["BENCH_r9.json", "BENCH_r10.json", "BENCH_r21.json",
+                    "BENCH_r100.json"]

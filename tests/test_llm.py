@@ -288,22 +288,32 @@ def test_duplicate_components_invariants(tables):
         assert c == min(ms)
 
 
-def test_components_star_equivalent_to_label(tables):
-    """Alternating large-star/small-star must produce byte-identical
-    component assignments to min-label propagation on the same pair graph."""
-    label = sorted(
-        tuple(r) for r in dedup.duplicate_components(tables["documents"]).collect()
+def test_components_star_equivalent_to_union_find(tables, monkeypatch):
+    """The distributed large-star/small-star loop (forced by patching the
+    driver limit to 0) must produce byte-identical component assignments
+    to the driver union-find on the same pair graph."""
+    s_driver: dict = {}
+    s_star: dict = {}
+    driver = sorted(
+        tuple(r)
+        for r in dedup.duplicate_components(tables["documents"], stats=s_driver).collect()
     )
+    monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", 0)
     star = sorted(
         tuple(r)
-        for r in dedup.duplicate_components(tables["documents"], algorithm="star").collect()
+        for r in dedup.duplicate_components(tables["documents"], stats=s_star).collect()
     )
-    assert label == star
+    assert s_driver["rounds"] == 0 and s_star["rounds"] >= 1
+    assert driver == star
 
 
-def test_components_star_fewer_rounds_on_chain(spark):
-    """On a long-diameter chain graph the star variant must reach fixpoint
-    in strictly fewer rounds than label propagation (O(log d) vs O(d))."""
+def test_components_star_fewer_rounds_on_chain(spark, monkeypatch):
+    """On a long-diameter chain graph the star loop must reach fixpoint
+    in O(log d) rounds — within log2(n_edges) + 2, the bound bench.py's
+    chain probe asserts — where min-label propagation needs O(d)."""
+    import math
+
+    monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", 0)
     n = 12
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(n)], "doc_id long, text string"
@@ -311,34 +321,34 @@ def test_components_star_fewer_rounds_on_chain(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    s_label: dict = {}
     s_star: dict = {}
-    out_label = dedup.duplicate_components(
-        docs, pairs=pairs, max_iterations=50, stats=s_label
-    ).collect()
     out_star = dedup.duplicate_components(
-        docs, pairs=pairs, algorithm="star", max_iterations=50, stats=s_star
+        docs, pairs=pairs, max_iterations=50, stats=s_star
     ).collect()
-    assert all(r["component_id"] == 0 for r in out_label)
     assert all(r["component_id"] == 0 for r in out_star)
-    assert s_star["rounds"] < s_label["rounds"]
-    assert s_label["n_edges"] == 2 * (n - 1)
+    assert s_star["n_edges"] == 2 * (n - 1)
+    assert 1 <= s_star["rounds"] <= math.log2(s_star["n_edges"]) + 2
 
 
-def test_components_over_lsh_candidate_feed(tables):
+def test_components_over_lsh_candidate_feed(tables, monkeypatch):
     """The scale path: components driven by MinHash-LSH candidate pairs
-    (no all-pairs join anywhere) over the FULL document set, with an
-    explicit partition count."""
+    (no all-pairs join anywhere) over the FULL document set, on the
+    distributed loop with the partition count derived from the edge
+    count (both module constants patched small to force the loop and a
+    multi-task fan-out)."""
+    import math
+
+    monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", 0)
+    monkeypatch.setattr(dedup, "_COMPONENT_ROWS_PER_PARTITION", 8)
     docs = tables["documents"]
     cand = dedup.minhash_lsh_candidates(docs, jaccard_threshold=0.5)
     stats: dict = {}
     comp = {
         r["doc_id"]: r["component_id"]
-        for r in dedup.duplicate_components(
-            docs, pairs=cand, num_partitions=2, stats=stats
-        ).collect()
+        for r in dedup.duplicate_components(docs, pairs=cand, stats=stats).collect()
     }
-    assert stats["num_partitions"] == 2
+    assert stats["rounds"] >= 1
+    assert stats["num_partitions"] == math.ceil(stats["n_edges"] / 8) > 1
     assert len(comp) == docs.count()  # injected pairs → node universe is ALL docs
     pair_rows = cand.collect()
     assert pair_rows, "LSH should find near-dup candidates in testdata"
@@ -646,7 +656,7 @@ def test_plan_cache_eviction_order_and_stats(spark):
         dedup._plan_cache.update(saved)
 
 
-def test_pipeline_near_dedup_flag(tables):
+def test_pipeline_near_dedup_flag(tables, monkeypatch):
     """near_dedup=True must remove exactly the non-canonical members of
     the LSH-candidate components computed over the exact-dedup survivors
     — the scale path (LSH → star components → keep canonical) wired
@@ -659,11 +669,14 @@ def test_pipeline_near_dedup_flag(tables):
         llm_pipeline.prepare_corpus(docs).agg(F.sum("n_docs")).first()[0]
     )
     stats: dict = {}
+    # the pipeline's components run on the distributed star loop
+    monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", 0)
     nd_docs = (
         llm_pipeline.prepare_corpus(docs, near_dedup=True, stats=stats)
         .agg(F.sum("n_docs"))
         .first()[0]
     )
+    monkeypatch.undo()  # the expected survivors: driver union-find
     # independently recompute the expected survivor set from the operators
     kept = text.quality_gate(docs).filter(F.col("keep")).select("doc_id")
     gated = docs.join(kept, "doc_id", "left_semi")
@@ -675,11 +688,11 @@ def test_pipeline_near_dedup_flag(tables):
     )
     survivors = docs.join(canonical, "doc_id", "left_semi")
     comps = dedup.duplicate_components(
-        survivors, pairs=dedup.minhash_lsh_candidates(survivors), algorithm="label"
+        survivors, pairs=dedup.minhash_lsh_candidates(survivors)
     )
     expected = comps.filter(F.col("is_canonical")).count()
     assert base_docs == survivors.count()
-    assert nd_docs == expected  # star-in-pipeline ≡ label-out-of-pipeline
+    assert nd_docs == expected  # star-in-pipeline ≡ union-find-out-of-pipeline
     assert nd_docs <= base_docs
     assert stats["rounds"] >= 1 and stats["num_partitions"] >= 1
 
@@ -3086,12 +3099,21 @@ def test_touch_attribution_hand_computed(spark):
     assert ("last_touch", "click") not in out
 
 
-def test_graph_local_paths_match_distributed(spark):
-    """The opt-in driver-local fast paths (k-core peel, components
-    union-find, pagerank power iteration) must agree with their
-    distributed fixpoint twins on a planted mix — identical coreness
-    and component labels (exact integers), pagerank within the 6dp
-    rounding band."""
+def test_graph_local_paths_match_distributed(spark, monkeypatch):
+    """The driver paths (k-core peel, components union-find, pagerank
+    power iteration) must agree with their distributed fixpoint twins
+    (forced by patching the driver limit to 0) on a planted mix —
+    identical coreness and component labels (exact integers), pagerank
+    within the 6dp rounding band.
+
+    The choice itself bounds what the driver collects, so it is made on
+    DIRECTED EDGE rows, not nodes: with the limit patched to 20, a
+    6-clique (6 nodes, 30 edge rows) runs the distributed loop in all six
+    kernels, and a 10-node path (18 edge rows) runs the driver path. The
+    path shows in the job count (the loops launch several jobs per round)
+    and in components' ``stats["rounds"]``."""
+    import uuid
+
     clique = [(a, b) for i, a in enumerate(range(5)) for b in range(i + 1, 5)]
     edges = clique + [(0, 10), (0, 11), (20, 21), (21, 22)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
@@ -3099,25 +3121,67 @@ def test_graph_local_paths_match_distributed(spark):
         [(i, "x") for i in [*range(5), 10, 11, 20, 21, 22, 99]],
         "doc_id long, text string",
     )
-    kd = {r["doc_id"]: r["coreness"]
-          for r in dedup.kcore_decomposition(docs, pairs=pairs).collect()}
-    kl = {r["doc_id"]: r["coreness"]
-          for r in dedup.kcore_decomposition(docs, pairs=pairs, local_threshold=10_000).collect()}
-    assert kl == kd
 
-    cd = {r["doc_id"]: r["component_id"]
-          for r in dedup.duplicate_components(docs, pairs=pairs).collect()}
-    cl = {r["doc_id"]: r["component_id"]
-          for r in dedup.duplicate_components(docs, pairs=pairs, local_threshold=10_000).collect()}
+    def run():
+        return (
+            {r["doc_id"]: r["coreness"]
+             for r in dedup.kcore_decomposition(docs, pairs=pairs).collect()},
+            {r["doc_id"]: r["component_id"]
+             for r in dedup.duplicate_components(docs, pairs=pairs).collect()},
+            {r["doc_id"]: r["pagerank"]
+             for r in dedup.pagerank_dup_graph(docs, pairs=pairs).collect()},
+        )
+
+    kl, cl, pl = run()
+    monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", 0)
+    kd, cd, pd_ = run()
+    assert kl == kd
     assert cl == cd
     assert cl[99] == 99  # singleton outside the pair graph keeps its id
-
-    pd_ = {r["doc_id"]: r["pagerank"]
-           for r in dedup.pagerank_dup_graph(docs, pairs=pairs).collect()}
-    pl = {r["doc_id"]: r["pagerank"]
-          for r in dedup.pagerank_dup_graph(docs, pairs=pairs, local_threshold=10_000).collect()}
     assert set(pl) == set(pd_)
     assert all(abs(pl[u] - pd_[u]) < 2e-6 for u in pd_)
+
+    # the edge-count gate
+    sc = spark.sparkContext
+    clique6 = [(a, b) for a in range(6) for b in range(a + 1, 6)]
+    path10 = [(i, i + 1) for i in range(100, 109)]
+    docs = spark.createDataFrame(
+        [(i, "x") for i in [*range(6), *range(100, 110)]], "doc_id long, text string"
+    )
+    kernels = {
+        "components": dedup.duplicate_components,
+        "pagerank": dedup.pagerank_dup_graph,
+        "kcore": dedup.kcore_decomposition,
+        "lpa": dedup.lpa_communities,
+        "closeness": dedup.closeness_centrality,
+        "betweenness": dedup.betweenness_centrality,
+    }
+
+    def jobs(fn, pairs, limit):
+        monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", limit)
+        group = f"gate-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "path gate")
+        try:
+            fn(docs, pairs=pairs).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for graph, dense in ((clique6, True), (path10, False)):
+        pairs = spark.createDataFrame(graph, "doc_a long, doc_b long")
+        for name, fn in kernels.items():
+            driver = jobs(fn, pairs, 20_000)
+            distributed = jobs(fn, pairs, 0)
+            gated = jobs(fn, pairs, 20)
+            assert distributed > 2 * driver, (name, driver, distributed)
+            if dense:
+                assert gated >= distributed, (name, gated, distributed)
+            else:
+                assert gated == driver, (name, gated, driver)
+        stats: dict = {}
+        dedup.duplicate_components(docs, pairs=pairs, stats=stats)
+        assert stats["n_edges"] == 2 * len(graph)
+        assert (stats["rounds"] >= 1) if dense else (stats["rounds"] == 0)
 
 
 def test_cluster_source_purity_hand_computed(spark):
@@ -3271,22 +3335,26 @@ def test_token_budget_hamilton_exact(spark):
     assert out2 == {"A": 34, "B": 33, "C": 33}
 
 
-def test_fuzzy_entity_clusters_transitive(spark):
+def test_fuzzy_entity_clusters_transitive(spark, monkeypatch):
     """widget/widgets/widgetz chain into ONE entity through the hub
     spelling even where the outer pair exceeds... (all within dist 4
     here); modal pick = most catalog rows (widgets ×3); canonical id =
-    min name; the unrelated singleton never reports."""
+    min name; the unrelated singleton never reports. String ids ride
+    both component paths: the driver union-find and the star loop
+    (driver limit patched to 0)."""
     rows = (
         [(i, "widgets") for i in range(3)]
         + [(10, "widget"), (11, "widgetz"), (12, "zebra")]
     )
     part = spark.createDataFrame(rows, "p_partkey long, p_name string")
-    out = dedup.fuzzy_entity_clusters(part).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["entity_id"] == "widget"
-    assert (r["n_variants"], r["total_rows"]) == (3, 5)
-    assert (r["modal_name"], r["modal_rows"]) == ("widgets", 3)
+    for limit in (dedup._DRIVER_GRAPH_EDGES, 0):
+        monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", limit)
+        out = dedup.fuzzy_entity_clusters(part).collect()
+        assert len(out) == 1
+        r = out[0]
+        assert r["entity_id"] == "widget"
+        assert (r["n_variants"], r["total_rows"]) == (3, 5)
+        assert (r["modal_name"], r["modal_rows"]) == ("widgets", 3)
 
 
 def test_weighted_reservoir_matches_reference(spark):
@@ -3441,17 +3509,17 @@ def test_leakage_safe_split_keeps_clusters_whole(spark):
     assert sum(r["n_clusters"] for r in rows) == 21  # triple = 1 cluster
 
 
-def test_lpa_local_matches_distributed(spark):
-    """The opt-in driver-local sync replay must produce byte-identical
-    community rows to the distributed fixpoint on a planted mix of
-    cliques, a bridge, and a path."""
+def test_lpa_local_matches_distributed(spark, monkeypatch):
+    """The driver-side sync replay must produce byte-identical community
+    rows to the distributed fixpoint (forced by patching the driver
+    limit to 0) on a planted mix of cliques, a bridge, and a path."""
     edges = [(1, 2), (1, 3), (2, 3), (10, 11), (10, 12), (11, 12),
              (3, 10), (20, 21), (21, 22)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     docs = spark.createDataFrame([(0, "x")], "doc_id long, text string")
+    loc = sorted(tuple(r) for r in dedup.lpa_communities(docs, pairs=pairs).collect())
+    monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", 0)
     dist = sorted(tuple(r) for r in dedup.lpa_communities(docs, pairs=pairs).collect())
-    loc = sorted(tuple(r) for r in
-                 dedup.lpa_communities(docs, pairs=pairs, local_threshold=10_000).collect())
     assert dist == loc and len(dist) >= 2
 
 
@@ -3781,7 +3849,7 @@ def test_census_guard_matryoshka_checkpointed_truth(spark, tables):
     assert n <= 7, f"matryoshka: {n} parquet scans (bound 7)"
 
 
-def test_closeness_centrality_hand_computed(spark):
+def test_closeness_centrality_hand_computed(spark, monkeypatch):
     """NEW r16: BFS closeness on a planted mix — a path 0-1-2-3 (ends:
     dists 1+2+3=6, ecc 3; middles: 1+1+2=4, ecc 2) and a disjoint
     triangle (each node: dists 1+1, ecc 1, closeness 1.0). Reachability
@@ -3801,16 +3869,17 @@ def test_closeness_centrality_hand_computed(spark):
         12: (3, 1, 2, 1.0),
         20: (1, 0, 0, None),
     }
-    # both paths must agree bit-for-bit: the distributed BFS fixpoint
-    # (default) and the opt-in driver-local endpoint
-    for kwargs in ({}, {"local_threshold": 1000}):
+    # both paths must agree bit-for-bit: the driver path (default on
+    # a graph this small) and the distributed BFS fixpoint (limit 0)
+    for limit in (dedup._DRIVER_GRAPH_EDGES, 0):
+        monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", limit)
         got = {
             r["doc_id"]: (
                 r["n_reachable"], r["eccentricity"], r["sum_dist"], r["closeness"]
             )
-            for r in dedup.closeness_centrality(docs, pairs=pairs, **kwargs).collect()
+            for r in dedup.closeness_centrality(docs, pairs=pairs).collect()
         }
-        assert got == want, (kwargs, got)
+        assert got == want, (limit, got)
 
 
 def test_kn_bigram_logprob_matches_pure_python(spark):
@@ -4016,22 +4085,21 @@ def test_betweenness_matches_brandes_reference(spark):
         assert got[v][0] == n_mid, v
 
 
-def test_betweenness_local_matches_distributed(spark):
-    """r17: the opt-in local fast path and the distributed
-    fixpoint+triple-join produce identical rows on the same edge feed
-    (the lpa_local_matches_distributed discipline)."""
+def test_betweenness_local_matches_distributed(spark, monkeypatch):
+    """The driver path and the distributed fixpoint+triple-join (forced
+    by patching the driver limit to 0) produce identical rows on the
+    same edge feed (the lpa_local_matches_distributed discipline)."""
     und = [(1, 2), (2, 3), (3, 4), (2, 5), (5, 4), (10, 11)]
     pairs = spark.createDataFrame(und, "doc_a long, doc_b long")
     docs = spark.createDataFrame([(0, "x")], "doc_id long, text string")
-    dist = {
+    loc = {
         tuple(r)
         for r in dedup.betweenness_centrality(docs, pairs=pairs).collect()
     }
-    loc = {
+    monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", 0)
+    dist = {
         tuple(r)
-        for r in dedup.betweenness_centrality(
-            docs, pairs=pairs, local_threshold=10_000
-        ).collect()
+        for r in dedup.betweenness_centrality(docs, pairs=pairs).collect()
     }
     assert dist == loc and len(dist) == 7
 
@@ -4059,12 +4127,13 @@ def test_census_guard_r17_new_plans(spark, tables):
         assert n <= bound, f"{name}: {n} parquet scans (bound {bound})"
 
 
-def test_betweenness_random_graph_matches_brandes(spark):
+def test_betweenness_random_graph_matches_brandes(spark, monkeypatch):
     """r17 hardening (the croston random-fixture pattern): a seeded
     Erdős–Rényi-ish graph (28 nodes, p≈0.12, plus a planted bridge
     between two halves so betweenness is non-trivial) — every node's
     score must match pure-python Brandes within the 6dp publishing
-    grid, and the bridge endpoints must rank in the top 3."""
+    grid on BOTH paths (driver, and distributed with the driver limit
+    patched to 0), and the bridge endpoints must rank in the top 3."""
     import random
     from collections import deque
 
@@ -4083,12 +4152,13 @@ def test_betweenness_random_graph_matches_brandes(spark):
     und.add((13, 14))
     pairs = spark.createDataFrame(sorted(und), "doc_a long, doc_b long")
     docs = spark.createDataFrame([(0, "x")], "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["betweenness"]
-        for r in dedup.betweenness_centrality(
-            docs, pairs=pairs, local_threshold=10_000
-        ).collect()
-    }
+    by_path = []
+    for limit in (dedup._DRIVER_GRAPH_EDGES, 0):
+        monkeypatch.setattr(dedup, "_DRIVER_GRAPH_EDGES", limit)
+        by_path.append({
+            r["doc_id"]: r["betweenness"]
+            for r in dedup.betweenness_centrality(docs, pairs=pairs).collect()
+        })
 
     adj = {}
     for a, b in und:
@@ -4118,10 +4188,11 @@ def test_betweenness_random_graph_matches_brandes(spark):
                 delta[u] += sigma[u] / sigma[w] * (1 + delta[w])
             if w != s:
                 bc[w] += delta[w]
-    for v in adj:
-        assert abs(got[v] - bc[v] / 2.0) < 1e-5, (v, got[v], bc[v] / 2.0)
-    top3 = sorted(got, key=lambda v: -got[v])[:3]
-    assert 13 in top3 and 14 in top3  # the planted bridge dominates
+    for got in by_path:
+        for v in adj:
+            assert abs(got[v] - bc[v] / 2.0) < 1e-5, (v, got[v], bc[v] / 2.0)
+        top3 = sorted(got, key=lambda v: -got[v])[:3]
+        assert 13 in top3 and 14 in top3  # the planted bridge dominates
 
 
 def test_kn_bigram_random_fixture_matches_reference(spark):

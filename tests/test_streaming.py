@@ -899,3 +899,25 @@ def test_join_then_window_boundary_and_subset(spark, tmp_path):
     assert stream_rows, "streaming output must be non-empty on testdata"
     for k, v in stream_rows.items():
         assert batch.get(k) == v, k
+
+
+def test_available_now_timeout_raises_instead_of_partial_sink(spark, tmp_path):
+    """A stream that has not drained its input when the wait runs out must
+    raise, not hand back whatever its sink holds so far; the query is
+    stopped either way. The foreachBatch body sleeps past the timeout, so
+    the wait is certain to expire first."""
+    import time
+
+    import pytest
+
+    src = tmp_path / "src"
+    spark.range(5).write.parquet(str(src))
+    stream = spark.readStream.schema("id long").parquet(str(src))
+
+    def slow_batch(df, epoch_id):
+        time.sleep(3)
+
+    writer = stream.writeStream.foreachBatch(slow_batch).queryName("t_avail_now_timeout")
+    with pytest.raises(TimeoutError, match="partial result"):
+        event_windows._run_available_now(writer, timeout=0.5)
+    assert all(q.name != "t_avail_now_timeout" for q in spark.streams.active)

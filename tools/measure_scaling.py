@@ -88,11 +88,11 @@ def scaled_documents(spark: SparkSession, sf_dir: str, scale: int) -> DataFrame:
 def scaled_orders(spark: SparkSession, sf_dir: str, scale: int) -> DataFrame:
     """Union of `scale` orders replicas with interleaved o_orderkey
     (base key * S + r — dense, so the CDC change-class partition of the
-    key space keeps the same PROPORTIONS at every scale) and per-replica
-    price jitter (+r cents — keeps replica rows from being value-clones
-    without moving any aggregate materially). r21 (r20 verdict #6): the
-    IVM refresh tier needs a scaled ORDERS corpus the way the gram
-    kernels needed documents."""
+    key space keeps the same PROPORTIONS at every scale). Every other
+    column is copied unchanged (no price jitter), so replica rows differ
+    only in their key: counts and sums over the replicas are exactly
+    `scale` times the base ones. The IVM refresh tier needs a scaled ORDERS corpus the way
+    the gram kernels needed documents."""
     from datalake_local_spark.session import load_tables
 
     base = load_tables(spark, sf_dir)["orders"]
