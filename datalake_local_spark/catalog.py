@@ -9,11 +9,19 @@ Reference behavior (SURVEY.md §1.1): every ingested table is recorded in
 Here Parquet managed tables are durable by construction, so the replay log
 becomes an append-only ``info.operations`` audit table — the capability
 (provenance + auditability) survives, the mechanism is columnar.
+
+Provenance rows are written with parameterized ``INSERT INTO ... VALUES``
+statements: local relations the JVM writes without a Python worker, one
+statement per info table per saved table (``info.files`` then
+``info.operations``, whose ``create_database`` and ``ingest`` rows share
+one statement). The row count of each save is observed on the write
+itself (``DataFrame.observe``), so callers never re-scan a table to learn
+it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -24,6 +32,8 @@ class InfoCatalog:
     def __init__(self, spark: SparkSession, db: str = "info"):
         self.spark = spark
         self.db = db
+        #: fqn -> rows written by this catalog's latest save of that table
+        self.rows_written: dict[str, int] = {}
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {db}.files "
@@ -34,10 +44,18 @@ class InfoCatalog:
             "(op STRING, target STRING, detail STRING, ts TIMESTAMP) USING PARQUET"
         )
 
-    def ensure_database(self, name: str) -> None:
-        """D1: CREATE SCHEMA IF NOT EXISTS (assets.py:35-36)."""
-        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}")
-        self.log_operation("create_database", name)
+    def _insert(self, table: str, columns: tuple[str, ...], rows) -> None:
+        """One ``INSERT INTO <db>.<table> VALUES`` of ``rows`` (values of
+        ``columns``), the insert time appended as the table's last column.
+        Markers are NAMED (``:op0``, ``:target0``, ...): positional ``?``
+        markers in a multi-row VALUES bind out of textual order on Spark
+        4.1."""
+        values, args = [], {}
+        for i, row in enumerate(rows):
+            names = [f"{c}{i}" for c in columns]
+            args.update(zip(names, row, strict=True))
+            values.append(f"({', '.join(':' + n for n in names)}, current_timestamp())")
+        self.spark.sql(f"INSERT INTO {self.db}.{table} VALUES {', '.join(values)}", args=args)
 
     def database_exists(self, name: str) -> bool:
         """D4: schema-existence probe (assets.py:393-401) via native catalog."""
@@ -45,17 +63,13 @@ class InfoCatalog:
 
     def register_table(self, table_name: str) -> None:
         """D5: provenance insert (assets.py:413-415)."""
-        self.spark.createDataFrame([(table_name,)], "table_name string").withColumn(
-            "creation", F.current_timestamp()
-        ).write.mode("append").insertInto(f"{self.db}.files")
+        self._insert("files", ("table_name",), [(table_name,)])
 
-    def log_operation(self, op: str, target: str, detail: str = "") -> None:
-        """S8 replacement: append-only audit instead of .sql replay files."""
-        self.spark.createDataFrame(
-            [(op, target, detail)], "op string, target string, detail string"
-        ).withColumn("ts", F.current_timestamp()).write.mode("append").insertInto(
-            f"{self.db}.operations"
-        )
+    def log_operation(self, *entries: tuple[str, str, str]) -> None:
+        """S8 replacement: append-only audit instead of .sql replay files.
+        Each entry is one ``(op, target, detail)`` row; all go in one
+        INSERT."""
+        self._insert("operations", ("op", "target", "detail"), entries)
 
     def files(self) -> DataFrame:
         return self.spark.table(f"{self.db}.files")
@@ -63,13 +77,18 @@ class InfoCatalog:
     def save_ingested(
         self, df: DataFrame, database: str, table: str, mode: str = "overwrite"
     ) -> str:
-        """D2+D3: batch, schema-checked, injection-free-by-construction
-        managed-table write (vs the reference's per-row committed string-
-        spliced INSERTs, assets.py:105-115, 385-390 — the documented
-        anti-pattern SURVEY.md §4 says not to reproduce)."""
-        self.ensure_database(database)
+        """D1+D2+D3: CREATE SCHEMA IF NOT EXISTS (assets.py:35-36), then a
+        batch, schema-checked, injection-free-by-construction managed-table
+        write (vs the reference's per-row committed string-spliced
+        INSERTs, assets.py:105-115, 385-390 — the documented anti-pattern
+        SURVEY.md §4 says not to reproduce). The written row count lands in
+        ``rows_written[fqn]``."""
+        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
         fqn = f"{database}.{table}"
-        df.write.mode(mode).format("parquet").saveAsTable(fqn)
+        written = Observation()
+        observed = df.observe(written, F.count(F.lit(1)).alias("rows"))
+        observed.write.mode(mode).format("parquet").saveAsTable(fqn)
+        self.rows_written[fqn] = written.get["rows"]
         self.register_table(fqn)
-        self.log_operation("ingest", fqn, f"mode={mode}")
+        self.log_operation(("create_database", database, ""), ("ingest", fqn, f"mode={mode}"))
         return fqn

@@ -107,13 +107,13 @@ def configure(spark: SparkSession) -> SparkSession:
     # runs; AQE coalesces, but a sane ceiling avoids tiny-task overhead.
     try:
         defaultism = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if defaultism >= 200:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_GRAFT_CPUS", "32"),
-            )
-    except Exception:
-        pass
+    except ValueError:  # a non-integer setting (e.g. a platform's "auto") is kept
+        defaultism = 0
+    if defaultism >= 200:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        )
     return spark
 
 

@@ -5,8 +5,10 @@ Reference behavior: per bucket → per .xlsx → per sheet: infer the 4-type
 lattice from stringified cells (assets.py:220-260), create
 ``<bucket>.<file>_<sheet>`` (sanitized, assets.py:53-61), insert row by
 row. Here: pandas reads the sheet (Spark has no native xlsx source), the
-compat inference produces a StructType, and one batched Arrow
-``createDataFrame`` + managed-table write replaces the row loop.
+compat inference produces a StructType, the cells are converted column by
+column into a ``pyarrow.Table`` of that schema, and one Arrow
+``createDataFrame`` (no Python worker) + managed-table write replaces the
+row loop.
 
 Scale path: a 100 TB landing zone of many xlsx files would distribute the
 *parse* too — ``spark.read.format('binaryFile')`` + ``mapInPandas`` opening
@@ -22,8 +24,12 @@ either environment; both produce the same stringified-cell contract.
 from __future__ import annotations
 
 import os
+from datetime import date, datetime
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from datalake_local_spark.catalog import InfoCatalog
 from datalake_local_spark.functions.sanitize import (
@@ -68,20 +74,20 @@ def _list_sheets(xlsx_path: str) -> list[str]:
         return xlsx_native.sheet_names(f.read())
 
 
-def read_sheet(spark: SparkSession, xlsx_path: str, sheet_name: str) -> DataFrame:
+def _sheet_table(xlsx_path: str, sheet_name: str) -> tuple[pa.Table, T.StructType]:
     """Parse one sheet with the reference's stringify-then-infer semantics
     (assets.py:220-250): cells stringified, nullish sentinels → NULL,
-    first-non-null typing."""
+    first-non-null typing. Returns the typed Arrow table and its Spark
+    schema; ``num_rows`` is the sheet's row count, known on the driver."""
     columns, raw_rows = _sheet_raw(xlsx_path, sheet_name)
     rows = [
         [None if (v is None or str(v) in NULLISH or str(v) == "nan") else str(v) for v in row]
         for row in raw_rows
     ]
-    from datetime import date, datetime
-
-    from pyspark.sql import types as T
-
     schema = infer_column_types(rows, columns)
+    # timestamps go in naive, so Spark reads each cell as wall-clock time
+    # in the session time zone (what CAST(string AS TIMESTAMP) does)
+    arrow_types = to_arrow_schema(schema, timestamp_utc=False).types
 
     def _convert(v, type_name):
         if v is None:
@@ -98,19 +104,27 @@ def read_sheet(spark: SparkSession, xlsx_path: str, sheet_name: str) -> DataFram
     # inferred from the FIRST non-null cell (reference semantics,
     # assets.py:294-301), so a mixed column ('123' then 'abc') would make
     # the strict converter raise and abort the whole ingest. Instead, any
-    # column whose cells don't all parse falls back to varchar — matching
-    # the compat path's best-effort intent — and the row loop never aborts.
+    # column whose cells don't all parse (or overflow the Arrow type)
+    # falls back to varchar — matching the compat path's best-effort
+    # intent — and the sheet never aborts.
     fields = list(schema.fields)
-    cols: list[list] = []
+    arrays = []
     for j, field in enumerate(fields):
         raw = [row[j] for row in rows]
         try:
-            cols.append([_convert(v, field.dataType.typeName()) for v in raw])
-        except (ValueError, TypeError):
+            converted = [_convert(v, field.dataType.typeName()) for v in raw]
+            arrays.append(pa.array(converted, type=arrow_types[j]))
+        except (ValueError, TypeError, OverflowError):
             fields[j] = T.StructField(field.name, T.StringType(), True)
-            cols.append(raw)
-    typed_rows = [list(t) for t in zip(*cols)] if cols else []
-    return spark.createDataFrame(typed_rows, T.StructType(fields))
+            arrays.append(pa.array(raw, type=pa.string()))
+    return pa.Table.from_arrays(arrays, names=[f.name for f in fields]), T.StructType(fields)
+
+
+def read_sheet(spark: SparkSession, xlsx_path: str, sheet_name: str) -> DataFrame:
+    """One sheet as a DataFrame built from its Arrow table (see
+    ``_sheet_table``): the rows cross to the JVM as Arrow batches, with no
+    Python worker."""
+    return spark.createDataFrame(*_sheet_table(xlsx_path, sheet_name))
 
 
 def xlsx_long_form(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -134,11 +148,11 @@ def ingest_excel_file(
     written: list[str] = []
     stem = os.path.splitext(os.path.basename(xlsx_path))[0]
     for sheet in _list_sheets(xlsx_path):
-        df = read_sheet(spark, xlsx_path, sheet)
-        if df.isEmpty():  # P3 empty-frame guard (assets.py:226,247)
+        parsed, schema = _sheet_table(xlsx_path, sheet)
+        if parsed.num_rows == 0:  # P3 empty-frame guard (assets.py:226,247)
             continue
         table = sanitize_db_name(f"{fix_string(stem)}_{fix_string(sheet)}")
-        written.append(catalog.save_ingested(df, db, table))
+        written.append(catalog.save_ingested(spark.createDataFrame(parsed, schema), db, table))
     return written
 
 

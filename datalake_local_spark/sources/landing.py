@@ -11,9 +11,17 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 EXCLUDED_BUCKETS = ("configuration",)  # P1 (assets.py:31, 145)
+
+_INVENTORY = T.StructType(
+    [T.StructField(n, T.StringType()) for n in ("bucket", "path", "name", "ext")]
+    + [T.StructField("size_bytes", T.LongType())]
+)
 
 
 def _discover_local(landing_root: str) -> list[tuple]:
@@ -78,16 +86,19 @@ def discover_landing(spark: SparkSession, landing_root: str) -> DataFrame:
         rows = _discover_hadoop(spark, landing_root)
     else:
         rows = _discover_local(landing_root)
-    return spark.createDataFrame(
-        rows, "bucket string, path string, name string, ext string, size_bytes long"
+    # an Arrow-built frame: collecting it runs no job and no Python worker
+    inventory = pa.Table.from_pylist(
+        [dict(zip(_INVENTORY.names, r)) for r in rows], schema=to_arrow_schema(_INVENTORY)
     )
+    return spark.createDataFrame(inventory, _INVENTORY)
 
 
 def ingest_landing(spark: SparkSession, landing_root: str) -> dict[str, int]:
     """Type-dispatched ingest of a whole landing zone (the reference's two
     Dagster jobs unified): .csv → semi-structured line pipeline, .jsonl/.json
-    → JSON source, .xlsx → Excel (when openpyxl present). Returns
-    table→rowcount. Idempotent: provenance + IF-NOT-EXISTS semantics via
+    → JSON source, .xlsx → Excel (stdlib parser without openpyxl).
+    Returns table→rowcount, the counts observed on each table's write (no
+    read-back scan). Idempotent: provenance + IF-NOT-EXISTS semantics via
     InfoCatalog."""
     from datalake_local_spark.catalog import InfoCatalog
     from datalake_local_spark.functions.sanitize import fix_string, sanitize_db_name
@@ -95,18 +106,14 @@ def ingest_landing(spark: SparkSession, landing_root: str) -> dict[str, int]:
     from datalake_local_spark.sources.excel import ingest_excel_file
 
     catalog = InfoCatalog(spark)
-    written: dict[str, int] = {}
     inventory = discover_landing(spark, landing_root).collect()
     for row in inventory:
         db = fix_string(row["bucket"])
         table = sanitize_db_name(fix_string(os.path.splitext(row["name"])[0]))
         if row["ext"] == "csv":
-            df = csv_lines.ingest_csv_lines(spark, row["path"])
-            fqn = catalog.save_ingested(df, db, table)
-            written[fqn] = spark.table(fqn).count()
+            catalog.save_ingested(csv_lines.ingest_csv_lines(spark, row["path"]), db, table)
         elif row["ext"] in ("json", "jsonl"):
             json_source.ingest_json(spark, row["path"], db, table, catalog=catalog)
-            written[f"{db}.{table}"] = spark.table(f"{db}.{table}").count()
         elif row["ext"] == "xlsx":
             # sheet parsing opens the file locally; file:// inventory
             # paths map back to plain paths (a remote object store would
@@ -128,6 +135,5 @@ def ingest_landing(spark: SparkSession, landing_root: str) -> dict[str, int]:
                     "for object-store roots use "
                     "xlsx_native.read_xlsx_distributed over binaryFile"
                 )
-            for fqn in ingest_excel_file(spark, local, db, catalog):
-                written[fqn] = spark.table(fqn).count()
-    return written
+            ingest_excel_file(spark, local, db, catalog)
+    return dict(catalog.rows_written)

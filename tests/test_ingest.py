@@ -66,12 +66,72 @@ def test_catalog_provenance_and_audit(spark):
     fqn = cat.save_ingested(df, "testdb_prov", "numbers")
     assert fqn == "testdb_prov.numbers"
     assert spark.table(fqn).count() == 5
+    assert cat.rows_written == {fqn: 5}
     assert cat.database_exists("testdb_prov")
-    ops = spark.table("info.operations").filter(F.col("target") == fqn)
-    assert ops.filter(F.col("op") == "ingest").count() >= 1
+    # one save: exactly one info.files row and the two audit rows, each
+    # value in its own column (a marker bound to the wrong column would
+    # move 'ingest' into target)
+    ops = (
+        spark.table("info.operations")
+        .filter(F.col("target").isin("testdb_prov", fqn))
+        .select("op", "target", "detail", F.col("ts").isNotNull().alias("has_ts"))
+        .collect()
+    )
+    assert sorted(tuple(r) for r in ops) == [
+        ("create_database", "testdb_prov", "", True),
+        ("ingest", fqn, "mode=overwrite", True),
+    ]
+    files = spark.table("info.files").filter(F.col("table_name") == fqn).collect()
+    assert len(files) == 1 and files[0]["creation"] is not None
     # idempotent overwrite re-run (reference D2 'IF NOT EXISTS' semantics)
     cat.save_ingested(df, "testdb_prov", "numbers")
     assert spark.table(fqn).count() == 5
+
+
+def test_ingest_write_path_builds_no_python_list_frames(spark, tmp_path, monkeypatch):
+    """Regression guard on the write path. A Python-list
+    ``createDataFrame`` goes through ``SparkContext.parallelize`` and runs
+    a Python-worker job when written, so the whole landing ingest must
+    never call it. Saving a 5-row frame costs the table write plus one
+    INSERT per info table (one Python-list frame per provenance row made
+    it 4 jobs), and the landing inventory collects without a job."""
+    import uuid
+
+    from datalake_local_spark.sources import landing
+
+    sc = spark.sparkContext
+
+    def no_parallelize(*_a, **_kw):
+        raise AssertionError("Python-list frame built on the ingest write path")
+
+    monkeypatch.setattr(sc, "parallelize", no_parallelize)
+
+    def jobs(fn):
+        group = f"write-path-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "write path jobs")
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    cat = InfoCatalog(spark)
+    df = spark.range(5).withColumnRenamed("id", "v")
+    assert jobs(lambda: cat.save_ingested(df, "testdb_jobs", "five")) <= 3
+
+    zone = tmp_path / "write_path_zone"
+    (zone / "jobs_zone").mkdir(parents=True)
+    (zone / "jobs_zone" / "ventas.csv").write_text(
+        "1/2/2024 Venta Animales: 5 Documento salida: 10\n"
+    )
+    (zone / "jobs_zone" / "extra.jsonl").write_text('{"a": 7}\n')
+    _write_minimal_xlsx(zone / "jobs_zone" / "libro.xlsx", {"s": (["k"], [[1], [2]])})
+    assert jobs(lambda: landing.discover_landing(spark, str(zone)).collect()) == 0
+    assert landing.ingest_landing(spark, str(zone)) == {
+        "jobs_zone.extra": 1,
+        "jobs_zone.libro_s": 2,
+        "jobs_zone.ventas": 1,
+    }
 
 
 def test_landing_discovery_and_dispatch(spark, tmp_path):
@@ -93,6 +153,39 @@ def test_landing_discovery_and_dispatch(spark, tmp_path):
     written = landing.ingest_landing(spark, str(root))
     assert written == {"granjaporcentaje_uno.ventas": 1, "granjaporcentaje_uno.extra": 1}
     assert spark.table("granjaporcentaje_uno.ventas").collect()[0]["n_animales"] == 5
+
+
+def test_ingest_landing_counts_are_the_written_tables(spark, tmp_path):
+    """``ingest_landing`` returns the row counts observed at write time;
+    each must equal a scan of the table it wrote. A sentinel-cut CSV, a
+    CSV with no sale line (an empty table, observed as 0), a JSONL file
+    and a workbook whose empty sheet makes no table and no ``info.files``
+    row."""
+    from datalake_local_spark.sources import landing
+
+    root = tmp_path / "landing_counts"
+    (root / "counts_zone").mkdir(parents=True)
+    (root / "counts_zone" / "granja.csv").write_text(SALES_FILE, encoding="latin-1")
+    (root / "counts_zone" / "sin_ventas.csv").write_text("nota sin ventas\n")
+    (root / "counts_zone" / "pedidos.jsonl").write_text('{"a": 1}\n{"a": 2}\n{"a": 3}\n')
+    _write_minimal_xlsx(
+        root / "counts_zone" / "libro.xlsx",
+        {"hoja": (["k", "v"], [[1, "x"], [2, "y"]]), "vacia": (["a"], [])},
+    )
+
+    written = landing.ingest_landing(spark, str(root))
+    assert written == {
+        "counts_zone.granja": 2,  # the sale after RECRIASIN is cut
+        "counts_zone.sin_ventas": 0,
+        "counts_zone.pedidos": 3,
+        "counts_zone.libro_hoja": 2,
+    }
+    for fqn, n in written.items():
+        assert spark.table(fqn).count() == n, fqn
+    assert not spark.catalog.tableExists("counts_zone.libro_vacia")
+    registered = {r["table_name"] for r in spark.table("info.files").collect()}
+    assert set(written) <= registered
+    assert "counts_zone.libro_vacia" not in registered
 
 
 def test_landing_discovery_from_uri_root(spark, tmp_path):
@@ -223,6 +316,48 @@ def test_excel_mixed_type_column_degrades_to_string(spark, tmp_path):
     types = {f.name: f.dataType.typeName() for f in df.schema.fields}
     assert types == {"k": "long", "v": "string"}
     assert [r["v"] for r in df.orderBy("k").collect()] == ["123", "abc"]
+
+
+def test_read_sheet_arrow_types_and_nulls(spark, tmp_path):
+    """The Arrow-built sheet frame: long, date (one before 1970),
+    timestamp, a mixed column and an out-of-range integer column degraded
+    to string, and an all-null column typed string; NULLs kept."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    fpath = tmp_path / "typed.xlsx"
+    _write_minimal_xlsx(
+        fpath,
+        {
+            "s": (
+                ["n", "d", "ts", "mixed", "big", "empty"],
+                [
+                    [5, "1969-07-20", "2024-01-02 10:00:00", 1, 1, None],
+                    [-3, "2024-02-29", "1965-03-04 05:06:07.25", "abc", "99999999999999999999", None],
+                    [None, None, None, 3, None, None],
+                ],
+            )
+        },
+    )
+    df = excel.read_sheet(spark, str(fpath), "s")
+    assert df.schema == T.StructType(
+        [
+            T.StructField("n", T.LongType()),
+            T.StructField("d", T.DateType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("mixed", T.StringType()),
+            T.StructField("big", T.StringType()),
+            T.StructField("empty", T.StringType()),
+        ]
+    )
+    # timestamps compared as session-zone wall clock, the value the cell held
+    rows = df.withColumn("ts", F.col("ts").cast("string")).collect()
+    assert [tuple(r) for r in rows] == [
+        (5, dt.date(1969, 7, 20), "2024-01-02 10:00:00", "1", "1", None),
+        (-3, dt.date(2024, 2, 29), "1965-03-04 05:06:07.25", "abc", "99999999999999999999", None),
+        (None, None, None, "3", None, None),
+    ]
 
 
 def test_xlsx_distributed_long_form(spark, tmp_path):
