@@ -93,9 +93,24 @@ def infer_column_types(rows: list[list[str]], columns: list[str]) -> T.StructTyp
     with no non-null value default to varchar. Mirrors the reference exactly —
     this is a compat path for small driver-side sheets; large files go through
     Spark's own schema inference.
+
+    Names are sanitized, and a name that repeats an earlier one (Spark
+    compares names case-insensitively) gets the first free numeric suffix
+    that no header spells literally: ``Total, total, total_2`` →
+    ``Total, total_3, total_2``, so one sheet's headers never abort a write.
     """
+    names = [sanitize_db_name(col) for col in columns]
+    taken = {n.lower() for n in names}
+    seen: set[str] = set()
     fields = []
-    for j, col in enumerate(columns):
+    for j, name in enumerate(names):
+        if name.lower() in seen:
+            k = 2
+            while f"{name}_{k}".lower() in taken:
+                k += 1
+            name = f"{name}_{k}"
+            taken.add(name.lower())
+        seen.add(name.lower())
         inferred = "varchar"
         for row in rows:
             v = row[j] if j < len(row) else None
@@ -103,5 +118,5 @@ def infer_column_types(rows: list[list[str]], columns: list[str]) -> T.StructTyp
                 continue
             inferred = identify_string_type(str(v))
             break
-        fields.append(T.StructField(sanitize_db_name(col), _SPARK_TYPES[inferred], True))
+        fields.append(T.StructField(name, _SPARK_TYPES[inferred], True))
     return T.StructType(fields)

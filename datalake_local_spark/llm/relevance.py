@@ -37,16 +37,6 @@ def _term_freqs(documents: DataFrame) -> DataFrame:
     )
 
 
-def _doc_tokens(documents: DataFrame) -> DataFrame:
-    """(doc_id, token, tf, dl): term frequency per doc + doc length,
-    from ONE tokenize+explode (the groupBy carries doc+token grain with
-    map-side combine; dl is recovered as sum(tf) over the doc — no
-    second corpus scan)."""
-    tf = _term_freqs(documents)
-    w_dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    return tf.join(w_dl, "doc_id")
-
-
 def tfidf_top_terms(documents: DataFrame, k: int = 5) -> DataFrame:
     """Top-k terms per document by TF-IDF.
 

@@ -3,8 +3,10 @@
 assets that don't exist in assets.py. Implemented natively.
 
 Two shapes:
-- file ingestion: ``spark.read.json`` (schema-on-read or explicit schema —
-  prefer explicit at scale so a bad file can't silently widen types);
+- file ingestion: ``spark.read.json`` schema-on-read (``ingest_json``), or
+  an explicit schema with a quarantine of malformed lines
+  (``ingest_json_with_quarantine``) — prefer explicit at scale so a bad
+  file can't silently widen types;
 - embedded JSON columns (``events.props``): ``from_json`` /
   ``get_json_object`` projections.
 """
@@ -19,21 +21,12 @@ from datalake_local_spark.catalog import InfoCatalog
 
 
 def ingest_json(
-    spark: SparkSession,
-    path: str,
-    database: str,
-    table: str,
-    schema: T.StructType | None = None,
-    multiline: bool = False,
-    catalog: InfoCatalog | None = None,
+    spark: SparkSession, path: str, database: str, table: str, catalog: InfoCatalog
 ) -> DataFrame:
-    """Read JSON (one object per line by default) and persist as a managed
-    table with provenance."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.option("multiLine", str(multiline).lower()).json(path)
-    (catalog or InfoCatalog(spark)).save_ingested(df, database, table)
+    """Read JSON lines (one object per line, schema-on-read) and persist as
+    a managed table with provenance."""
+    df = spark.read.json(path)
+    catalog.save_ingested(df, database, table)
     return df
 
 
@@ -72,8 +65,6 @@ def ingest_json_with_quarantine(
     return clean, quarantine
 
 
-def parse_props_column(
-    events: DataFrame, schema: str = "k BIGINT", column: str = "props"
-) -> DataFrame:
-    """Typed extraction of an embedded JSON column via from_json."""
-    return events.withColumn("props_struct", F.from_json(F.col(column), schema))
+def parse_props_column(events: DataFrame) -> DataFrame:
+    """Typed extraction of the embedded ``events.props`` JSON via from_json."""
+    return events.withColumn("props_struct", F.from_json(F.col("props"), "k BIGINT"))

@@ -96,7 +96,7 @@ def discover_landing(spark: SparkSession, landing_root: str) -> DataFrame:
 def ingest_landing(spark: SparkSession, landing_root: str) -> dict[str, int]:
     """Type-dispatched ingest of a whole landing zone (the reference's two
     Dagster jobs unified): .csv → semi-structured line pipeline, .jsonl/.json
-    → JSON source, .xlsx → Excel (stdlib parser without openpyxl).
+    → JSON source, .xlsx → Excel (stdlib SpreadsheetML parser).
     Returns table→rowcount, the counts observed on each table's write (no
     read-back scan). Idempotent: provenance + IF-NOT-EXISTS semantics via
     InfoCatalog."""
@@ -115,21 +115,19 @@ def ingest_landing(spark: SparkSession, landing_root: str) -> dict[str, int]:
         elif row["ext"] in ("json", "jsonl"):
             json_source.ingest_json(spark, row["path"], db, table, catalog=catalog)
         elif row["ext"] == "xlsx":
-            # sheet parsing opens the file locally; file:// inventory
-            # paths map back to plain paths (a remote object store would
-            # route through sources.xlsx_native.read_xlsx_distributed's
-            # binaryFile scan instead — this loop is the catalog-sized
-            # driver dispatch, not the data path)
+            # the workbook is opened locally; file:// inventory paths map
+            # back to plain paths (a remote object store routes through
+            # sources.xlsx_native.read_xlsx_distributed's binaryFile scan
+            # instead — this loop is the catalog-sized driver dispatch,
+            # not the data path)
             local = row["path"]
             if local.startswith("file:"):
                 from urllib.parse import unquote, urlparse
 
                 local = unquote(urlparse(local).path)
             elif "://" in local:
-                # mirror sources.pyds.XlsxReader: reject remote schemes
-                # LOUDLY before open()/read_excel produces an opaque
-                # mid-ingest failure — s3a://abfss:// inventories route
-                # xlsx through the distributed binaryFile reader instead
+                # reject remote schemes LOUDLY before open() produces an
+                # opaque mid-ingest failure
                 raise ValueError(
                     f"xlsx landing ingest opens files locally (got {local!r}); "
                     "for object-store roots use "

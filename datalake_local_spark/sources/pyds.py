@@ -1,108 +1,12 @@
-"""Python Data Source (Spark 4 API) for the landing zone's xlsx files —
-``spark.read.format("xlsx").load(dir)`` as a first-class source.
-
-The reference's Excel ingestion is a driver-side pandas loop per object
-(assets.py:219-260); sources/excel.py re-expresses it and
-sources/xlsx_native.read_xlsx_distributed gives the binaryFile +
-mapInPandas scale path. This module wires the SAME stdlib SpreadsheetML
-parser into Spark 4's ``pyspark.sql.datasource`` V2 API so the format
-composes with everything a DataSource gets for free: ``.load()`` path
-handling, schema-on-read, column pruning above the source, and
-per-file input partitions (one task per workbook — the right grain for
-a landing zone of many small books; a 100 TB zone of many files
-parallelizes by file count).
-
-Output is the schema-stable long form (path, sheet, row_idx, column,
-value) — the same contract as read_xlsx_distributed, so the two paths
-are interchangeable and cross-checked in tests.
+"""Python streaming Data Source (Spark 4 API) over a landing-zone jsonl
+file: ``spark.readStream.format("jsonl_replay").load(file)`` replays the
+file's lines as deterministic micro-batches, so a stream over the landing
+zone gets exactly-once delivery from offsets that are line numbers.
 """
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
-
-
-class XlsxFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class XlsxDataSource(DataSource):
-    """``spark.dataSource.register(XlsxDataSource)`` then
-    ``spark.read.format("xlsx").load("/landing")``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "xlsx"
-
-    def schema(self) -> str:
-        # row_idx is LONG to match xlsx_native.read_xlsx_distributed's
-        # contract exactly — the two paths must unionByName without casts
-        return "path string, sheet string, row_idx long, column string, value string"
-
-    def reader(self, schema) -> "XlsxReader":
-        return XlsxReader(self.options)
-
-
-class XlsxReader(DataSourceReader):
-    def __init__(self, options):
-        root = options.get("path")
-        if not root:
-            raise ValueError("xlsx source requires a path: .load('/landing/dir')")
-        if root.startswith("file:"):
-            # map file:// URIs back to plain paths (os.walk on the URI
-            # string would silently yield ZERO partitions); other
-            # schemes are not supported by this driver-side lister
-            from urllib.parse import unquote, urlparse
-
-            root = unquote(urlparse(root).path)
-        elif "://" in root:
-            raise ValueError(
-                f"xlsx source lists local paths only (got {root!r}); for object "
-                "stores use xlsx_native.read_xlsx_distributed over binaryFile"
-            )
-        self.root = root
-
-    def partitions(self) -> list[XlsxFilePartition]:
-        # driver-side listing (catalog-sized, like sources/landing.py);
-        # one partition per workbook so parsing parallelizes by file
-        if os.path.isfile(self.root):
-            return [XlsxFilePartition(self.root)]
-        found = []
-        for dirpath, _dirs, files in os.walk(self.root):
-            for fname in sorted(files):
-                if fname.endswith(".xlsx"):
-                    found.append(XlsxFilePartition(os.path.join(dirpath, fname)))
-        return found
-
-    def read(self, partition: XlsxFilePartition) -> Iterator[tuple]:
-        # executor-side: stdlib SpreadsheetML parse of ONE workbook
-        from datalake_local_spark.sources import xlsx_native
-
-        with open(partition.path, "rb") as f:
-            parsed = xlsx_native.parse_xlsx(f.read())
-        for sheet, (header, rows) in parsed.items():
-            for row_idx, row in enumerate(rows):
-                for col, value in zip(header, row):
-                    yield (partition.path, sheet, row_idx, col, value)
-                # ragged trailing cells beyond the header keep their
-                # positional column name — same contract (col_N) as
-                # xlsx_native.read_xlsx_distributed
-                for j in range(len(header), len(row)):
-                    yield (partition.path, sheet, row_idx, f"col_{j}", row[j])
-
-
-def register(spark) -> None:
-    """Idempotent registration of the xlsx Python data source."""
-    spark.dataSource.register(XlsxDataSource)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 
 class JsonlReplayStreamReader(SimpleDataSourceStreamReader):

@@ -2,11 +2,11 @@
 
 The reference's primary entry point is Excel multi-sheet ingestion
 (assets.py:41-64, 220-250: download xlsx → iterate sheets → stringify
-cells → infer types → insert). This container has no xlsx library, but
+cells → infer types → insert). The engine depends on no xlsx library:
 xlsx is just a zip of XML (ECMA-376 SpreadsheetML), so the parse is
-stdlib: ``zipfile`` + ``xml.etree``. Cells come back STRINGIFIED — the
-same contract as the reference's ``pd.read_excel(dtype=str)`` path — and
-feed the existing infer/ingest pipeline unchanged.
+stdlib: ``zipfile`` + ``xml.etree``, and it is the only xlsx parser.
+Cells come back STRINGIFIED — the same contract as the reference's
+``pd.read_excel(dtype=str)`` path — and feed the infer/ingest pipeline.
 
 Scale path: ``read_xlsx_distributed`` moves the SAME kernel executor-side
 via ``spark.read.format('binaryFile')`` + ``mapInPandas`` — a 100 TB
@@ -61,12 +61,6 @@ def _cell_text(cell, shared: list[str]) -> str | None:
     except ValueError:
         pass
     return txt
-
-
-def sheet_names(data: bytes) -> list[str]:
-    with zipfile.ZipFile(io.BytesIO(data)) as zf:
-        wb = ET.fromstring(zf.read("xl/workbook.xml"))
-    return [s.get("name") for s in wb.iter(f"{_NS}sheet")]
 
 
 def parse_xlsx(data: bytes) -> dict[str, tuple[list[str], list[list[str | None]]]]:

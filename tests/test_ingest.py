@@ -1,11 +1,12 @@
 """Ingestion-subsystem tests: CSV semi-structured pipeline, JSON source,
-catalog provenance, Excel gating."""
+catalog provenance, the xlsx parser and landing-zone ingestion."""
 
-import pytest
+import os
+
 from pyspark.sql import functions as F
 
 from datalake_local_spark.catalog import InfoCatalog
-from datalake_local_spark.sources import csv_lines, excel, json_source
+from datalake_local_spark.sources import csv_lines, excel, json_source, xlsx_native
 
 SALES_FILE = """HEADER JUNK
 1/2/2024 Venta Animales: 12 Documento salida: 777 vaca blanca
@@ -18,11 +19,17 @@ RECRIASIN fin de seccion
 
 def test_csv_lines_parse_and_sentinel(spark, tmp_path):
     p = tmp_path / "granja_sur.csv"
-    p.write_text(SALES_FILE, encoding="latin-1")
-    out = csv_lines.ingest_csv_lines(spark, str(p), prefix="pfx").collect()
-    # sentinel cuts the third sale; non-matching lines filtered
-    assert len(out) == 2
+    # the reference reads landing CSVs as latin-1 (assets.py:149-154): a
+    # non-ASCII byte must decode, not turn into U+FFFD
+    p.write_text(
+        "3/1/2024 Venta Animales: 4 Documento salida: 776 vaca año niño\n" + SALES_FILE,
+        encoding="latin-1",
+    )
+    out = csv_lines.ingest_csv_lines(spark, str(p)).collect()
+    # sentinel cuts the last sale; non-matching lines filtered
+    assert len(out) == 3
     by_doc = {r["documento_salida"]: r for r in out}
+    assert by_doc[776]["extra"] == "vaca año niño"
     assert by_doc[777]["fecha"] == "1/2/2024"
     assert by_doc[777]["n_animales"] == 12
     assert by_doc[777]["extra"] == "vaca blanca"
@@ -44,7 +51,7 @@ def test_csv_lines_schema(spark, tmp_path):
 def test_json_ingest_roundtrip(spark, tmp_path):
     p = tmp_path / "data.jsonl"
     p.write_text('{"a": 1, "b": "x"}\n{"a": 2, "b": "y"}\n')
-    df = json_source.ingest_json(spark, str(p), "testdb_json", "t1")
+    df = json_source.ingest_json(spark, str(p), "testdb_json", "t1", InfoCatalog(spark))
     assert df.count() == 2
     assert spark.table("testdb_json.t1").count() == 2
     files = spark.table("info.files")
@@ -170,7 +177,13 @@ def test_ingest_landing_counts_are_the_written_tables(spark, tmp_path):
     (root / "counts_zone" / "pedidos.jsonl").write_text('{"a": 1}\n{"a": 2}\n{"a": 3}\n')
     _write_minimal_xlsx(
         root / "counts_zone" / "libro.xlsx",
-        {"hoja": (["k", "v"], [[1, "x"], [2, "y"]]), "vacia": (["a"], [])},
+        {
+            "hoja": (["k", "v"], [[1, "x"], [2, "y"]]),
+            "vacia": (["a"], []),
+            # headers that collide once sanitized (Spark names are
+            # case-insensitive) must not abort the landing ingest
+            "totales": (["Total", "total", "total_2"], [[1, 2, 3]]),
+        },
     )
 
     written = landing.ingest_landing(spark, str(root))
@@ -179,7 +192,11 @@ def test_ingest_landing_counts_are_the_written_tables(spark, tmp_path):
         "counts_zone.sin_ventas": 0,
         "counts_zone.pedidos": 3,
         "counts_zone.libro_hoja": 2,
+        "counts_zone.libro_totales": 1,
     }
+    totales = spark.table("counts_zone.libro_totales")
+    assert totales.columns == ["Total", "total_3", "total_2"]
+    assert tuple(totales.first()) == (1, 2, 3)
     for fqn, n in written.items():
         assert spark.table(fqn).count() == n, fqn
     assert not spark.catalog.tableExists("counts_zone.libro_vacia")
@@ -275,9 +292,10 @@ def _write_minimal_xlsx(path, sheets):
 
 
 def test_native_xlsx_parse_and_ingest(spark, tmp_path):
-    """Full Excel entry point without openpyxl: stdlib parse → stringify →
-    infer → managed tables (the reference's Insert_excel_tables shape)."""
-    from datalake_local_spark.sources import xlsx_native
+    """Full Excel entry point: stdlib parse → stringify → infer → managed
+    tables (the reference's Insert_excel_tables shape), the bucket walk
+    being the landing zone's."""
+    from datalake_local_spark.sources import landing
 
     bucket = tmp_path / "granja uno"
     bucket.mkdir()
@@ -301,9 +319,39 @@ def test_native_xlsx_parse_and_ingest(spark, tmp_path):
     assert types == {"animales": "long", "precio": "string", "fecha": "date", "nota": "string"}
     assert df.count() == 2
 
-    written = excel.ingest_excel_dir(spark, str(tmp_path))
-    assert written == ["granja_uno.ventas_2024_resumen"]  # empty sheet skipped
+    written = landing.ingest_landing(spark, str(tmp_path))
+    assert written == {"granja_uno.ventas_2024_resumen": 2}  # empty sheet skipped
     assert spark.table("granja_uno.ventas_2024_resumen").count() == 2
+    assert not spark.catalog.tableExists("granja_uno.ventas_2024_vacia")
+
+
+def test_ingest_excel_file_parses_workbook_once(spark, tmp_path, monkeypatch):
+    """A k-sheet workbook is opened once and parsed once, not once per
+    sheet plus once for the sheet list."""
+    import builtins
+
+    fpath = tmp_path / "dos_hojas.xlsx"
+    _write_minimal_xlsx(fpath, {"a": (["k"], [[1], [2]]), "b": (["v"], [["x"]])})
+    parses, opens = [], []
+    real_parse, real_open = xlsx_native.parse_xlsx, builtins.open
+
+    def counting_parse(data):
+        parses.append(len(data))
+        return real_parse(data)
+
+    def counting_open(file, *args, **kwargs):
+        if isinstance(file, (str, os.PathLike)) and os.fspath(file) == str(fpath):
+            opens.append(file)
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(xlsx_native, "parse_xlsx", counting_parse)
+    monkeypatch.setattr(builtins, "open", counting_open)
+    excel.ingest_excel_file(spark, str(fpath), "testdb_once", InfoCatalog(spark))
+    monkeypatch.undo()
+    assert len(parses) == 1
+    assert len(opens) == 1
+    assert spark.table("testdb_once.dos_hojas_a").count() == 2
+    assert spark.table("testdb_once.dos_hojas_b").count() == 1
 
 
 def test_excel_mixed_type_column_degrades_to_string(spark, tmp_path):
@@ -361,11 +409,28 @@ def test_read_sheet_arrow_types_and_nulls(spark, tmp_path):
 
 
 def test_xlsx_distributed_long_form(spark, tmp_path):
-    fpath = tmp_path / "w.xlsx"
-    _write_minimal_xlsx(fpath, {"s1": (["a", "b"], [[1, "x"], [2, "y"]])})
-    out = excel.xlsx_long_form(spark, str(tmp_path))
-    rows = {(r["sheet"], r["row_idx"], r["column"]): r["value"] for r in out.collect()}
+    """Executor-side long form over a directory tree: two workbooks, one
+    in a nested directory, three sheets, one row per cell, row_idx long."""
+    from pyspark.sql import types as T
+
+    root = tmp_path / "long_zone"
+    (root / "sub").mkdir(parents=True)
+    _write_minimal_xlsx(
+        root / "book1.xlsx",
+        {"s1": (["a", "b"], [[1, "x"], [2, "y"]]), "s2": (["c"], [[3]])},
+    )
+    _write_minimal_xlsx(root / "sub" / "book2.xlsx", {"only": (["d"], [[4], [5]])})
+    out = xlsx_native.read_xlsx_distributed(spark, str(root))
+    assert out.schema["row_idx"].dataType == T.LongType()
+    collected = out.collect()
+    rows = {(r["sheet"], r["row_idx"], r["column"]): r["value"] for r in collected}
+    assert len(collected) == len(rows) == 4 + 1 + 2  # book1.s1 4 cells, s2 1, book2 2
     assert rows[("s1", 0, "a")] == "1" and rows[("s1", 1, "b")] == "y"
+    assert rows[("s2", 0, "c")] == "3"
+    assert rows[("only", 0, "d")] == "4" and rows[("only", 1, "d")] == "5"
+    assert {os.path.basename(r["path"]) for r in collected if r["sheet"] == "only"} == {
+        "book2.xlsx"
+    }
 
 
 def test_xlsx_distributed_keeps_ragged_trailing_cells(spark, tmp_path):
@@ -375,7 +440,7 @@ def test_xlsx_distributed_keeps_ragged_trailing_cells(spark, tmp_path):
     _write_minimal_xlsx(
         fpath, {"s1": (["a", "b"], [[1, "x", "overflow", 9], [2, "y"]])}
     )
-    out = excel.xlsx_long_form(spark, str(tmp_path))
+    out = xlsx_native.read_xlsx_distributed(spark, str(tmp_path))
     rows = {(r["row_idx"], r["column"]): r["value"] for r in out.collect()}
     assert rows[(0, "col_2")] == "overflow" and rows[(0, "col_3")] == "9"
     assert (1, "col_2") not in rows
@@ -512,66 +577,3 @@ def test_landing_to_query_oracle_parity(spark, tmp_path):
             tuple(r) for r in con.execute(sql.format(o="orders", c="customers")).fetchall()
         ]
         assert got == want, f"{name}: spark={got} oracle={want}"
-
-
-def test_python_datasource_xlsx_matches_distributed_reader(spark, tmp_path):
-    """Spark 4 Python DataSource (format('xlsx')) must produce the same
-    long-form cells as the binaryFile+mapInPandas path — two routes, one
-    contract — and must parallelize by file (one partition per book)."""
-    from datalake_local_spark.sources import pyds
-
-    root = tmp_path / "pyds_zone"
-    (root / "sub").mkdir(parents=True)
-    _write_minimal_xlsx(
-        root / "book1.xlsx",
-        {"s1": (["a", "b"], [[1, "x"], [2, "y"]]), "s2": (["c"], [[3]])},
-    )
-    _write_minimal_xlsx(root / "sub" / "book2.xlsx", {"only": (["d"], [[4], [5]])})
-
-    pyds.register(spark)
-    via_pyds = spark.read.format("xlsx").load(str(root))
-    assert via_pyds.rdd.getNumPartitions() == 2  # one per workbook
-    cells_pyds = {
-        (r["sheet"], r["row_idx"], r["column"], r["value"]) for r in via_pyds.collect()
-    }
-    from datalake_local_spark.sources import xlsx_native
-
-    cells_dist = {
-        (r["sheet"], r["row_idx"], r["column"], r["value"])
-        for r in xlsx_native.read_xlsx_distributed(spark, str(root)).collect()
-    }
-    assert cells_pyds == cells_dist
-    assert len(cells_pyds) == 4 + 1 + 2  # book1.s1 4 cells, s2 1, book2 2
-    # "interchangeable" must hold at SCHEMA level too (unionByName-safe),
-    # not just collected values — row_idx long in both paths
-    assert (
-        via_pyds.schema == xlsx_native.read_xlsx_distributed(spark, str(root)).schema
-    )
-
-    # column pruning + filter compose above the source
-    vals = (
-        spark.read.format("xlsx")
-        .load(str(root))
-        .filter("sheet = 'only'")
-        .select("value")
-        .collect()
-    )
-    assert sorted(r["value"] for r in vals) == ["4", "5"]
-
-
-def test_python_datasource_xlsx_file_uri_and_remote_rejection(spark, tmp_path):
-    """file:// roots map to local paths (the URI string would silently
-    list nothing); non-file schemes fail loudly with the distributed
-    alternative named."""
-    from datalake_local_spark.sources import pyds
-
-    root = tmp_path / "pyds_uri"
-    root.mkdir()
-    _write_minimal_xlsx(root / "b.xlsx", {"s": (["a"], [[1]])})
-    pyds.register(spark)
-    rows = spark.read.format("xlsx").load(f"file://{root}").collect()
-    assert len(rows) == 1 and rows[0]["value"] == "1"
-    import pytest
-
-    with pytest.raises(Exception, match="local paths only"):
-        spark.read.format("xlsx").load("s3a://bucket/zone").collect()

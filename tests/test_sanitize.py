@@ -49,6 +49,14 @@ def test_infer_first_non_null_typing():
     assert schema.fields[0].dataType == T.LongType()  # first non-null is "42"
     assert schema.fields[1].dataType == T.StringType()  # first non-null is "abc"
     assert schema.fields[2].dataType == T.LongType()  # first non-null is "1"
+    # names that collide once sanitized (case-insensitively, as Spark
+    # compares them) get a suffix no header spells literally; types stay
+    # with their column
+    collide = infer_column_types([["1", "x", "2", "y"]], ["Total", "to tal", "total", "total_2"])
+    assert collide.names == ["Total", "to_tal", "total_3", "total_2"]
+    assert [f.dataType for f in collide.fields] == [
+        T.LongType(), T.StringType(), T.LongType(), T.StringType()
+    ]
 
 
 def test_infer_all_null_defaults_varchar():
