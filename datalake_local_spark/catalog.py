@@ -10,16 +10,20 @@ Here Parquet managed tables are durable by construction, so the replay log
 becomes an append-only ``info.operations`` audit table — the capability
 (provenance + auditability) survives, the mechanism is columnar.
 
-Provenance rows are written with parameterized ``INSERT INTO ... VALUES``
-statements: local relations the JVM writes without a Python worker, one
-statement per info table per saved table (``info.files`` then
-``info.operations``, whose ``create_database`` and ``ingest`` rows share
-one statement). The row count of each save is observed on the write
-itself (``DataFrame.observe``), so callers never re-scan a table to learn
-it.
+A catalog is used as a context manager, and one ``with`` block is one
+ingest pass. ``save_ingested`` writes its table and stages the provenance
+rows; leaving the block flushes them, also on error, with parameterized
+``INSERT INTO ... VALUES`` statements: local relations the JVM writes
+without a Python worker, one statement per info table per pass
+(``info.files`` then ``info.operations``). Saves may run on several
+threads at once; staging is locked, and each table may be saved once per
+pass. The row count of each save is observed on the write itself
+(``DataFrame.observe``), so callers never re-scan a table to learn it.
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -27,13 +31,20 @@ from pyspark.sql import functions as F
 
 class InfoCatalog:
     """Provenance registry over managed tables (``info.files`` +
-    ``info.operations``)."""
+    ``info.operations``), used as ``with InfoCatalog(spark) as catalog:``
+    around one ingest pass."""
 
     def __init__(self, spark: SparkSession, db: str = "info"):
         self.spark = spark
         self.db = db
         #: fqn -> rows written by this catalog's latest save of that table
         self.rows_written: dict[str, int] = {}
+        #: fqn -> the audit rows of its save in this pass, for ``flush``
+        self._staged: dict[str, list[tuple[str, str, str]]] = {}
+        #: tables saved (or being saved) in this pass, lower-cased: Spark
+        #: table names are case-insensitive
+        self._claimed: set[str] = set()
+        self._lock = threading.Lock()
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {db}.files "
@@ -43,6 +54,12 @@ class InfoCatalog:
             f"CREATE TABLE IF NOT EXISTS {db}.operations "
             "(op STRING, target STRING, detail STRING, ts TIMESTAMP) USING PARQUET"
         )
+
+    def __enter__(self) -> InfoCatalog:
+        return self
+
+    def __exit__(self, *exc_info) -> None:
+        self.flush()
 
     def _insert(self, table: str, columns: tuple[str, ...], rows) -> None:
         """One ``INSERT INTO <db>.<table> VALUES`` of ``rows`` (values of
@@ -61,9 +78,10 @@ class InfoCatalog:
         """D4: schema-existence probe (assets.py:393-401) via native catalog."""
         return self.spark.catalog.databaseExists(name)
 
-    def register_table(self, table_name: str) -> None:
-        """D5: provenance insert (assets.py:413-415)."""
-        self._insert("files", ("table_name",), [(table_name,)])
+    def register_table(self, *table_names: str) -> None:
+        """D5: provenance insert (assets.py:413-415), one row per table,
+        all in one INSERT."""
+        self._insert("files", ("table_name",), [(t,) for t in table_names])
 
     def log_operation(self, *entries: tuple[str, str, str]) -> None:
         """S8 replacement: append-only audit instead of .sql replay files.
@@ -74,6 +92,18 @@ class InfoCatalog:
     def files(self) -> DataFrame:
         return self.spark.table(f"{self.db}.files")
 
+    def flush(self) -> None:
+        """End the pass: write the staged provenance of every saved table,
+        sorted by table name, as one ``info.files`` INSERT and one
+        ``info.operations`` INSERT (none if nothing was saved). Every
+        table may be saved again after it."""
+        with self._lock:
+            staged, self._staged, self._claimed = self._staged, {}, set()
+        if staged:
+            fqns = sorted(staged)
+            self.register_table(*fqns)
+            self.log_operation(*(entry for fqn in fqns for entry in staged[fqn]))
+
     def save_ingested(
         self, df: DataFrame, database: str, table: str, mode: str = "overwrite"
     ) -> str:
@@ -82,13 +112,22 @@ class InfoCatalog:
         write (vs the reference's per-row committed string-spliced
         INSERTs, assets.py:105-115, 385-390 — the documented anti-pattern
         SURVEY.md §4 says not to reproduce). The written row count lands in
-        ``rows_written[fqn]``."""
-        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
+        ``rows_written[fqn]``, and the table's ``info.files`` row and its
+        ``create_database`` + ``ingest`` audit rows are staged for
+        ``flush``. The table is claimed for the pass before the write: a
+        second save of it in one pass (two landing files mapping to one
+        table) raises ``ValueError`` instead of overwriting the first."""
         fqn = f"{database}.{table}"
+        with self._lock:
+            if fqn.lower() in self._claimed:
+                raise ValueError(f"table {fqn} is saved twice in one ingest pass")
+            self._claimed.add(fqn.lower())
+        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
         written = Observation()
         observed = df.observe(written, F.count(F.lit(1)).alias("rows"))
         observed.write.mode(mode).format("parquet").saveAsTable(fqn)
-        self.rows_written[fqn] = written.get["rows"]
-        self.register_table(fqn)
-        self.log_operation(("create_database", database, ""), ("ingest", fqn, f"mode={mode}"))
+        rows = written.get["rows"]
+        with self._lock:
+            self.rows_written[fqn] = rows
+            self._staged[fqn] = [("create_database", database, ""), ("ingest", fqn, f"mode={mode}")]
         return fqn

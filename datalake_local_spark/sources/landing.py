@@ -4,7 +4,7 @@
 
 Returns the inventory as a DataFrame so discovery itself is queryable
 (filter by extension = P2, exclude configuration = P1), and feeds the
-type-dispatched ingest loop.
+type-dispatched ingest pass.
 """
 
 from __future__ import annotations
@@ -97,17 +97,30 @@ def ingest_landing(spark: SparkSession, landing_root: str) -> dict[str, int]:
     """Type-dispatched ingest of a whole landing zone (the reference's two
     Dagster jobs unified): .csv → semi-structured line pipeline, .jsonl/.json
     → JSON source, .xlsx → Excel (stdlib SpreadsheetML parser).
+
+    One pass: each landing file is one task on a pool of
+    ``min(files, defaultParallelism)`` threads, whose Spark jobs stay in
+    the caller's job group, and the provenance of the whole pass is
+    written once at its end (``InfoCatalog.flush``). A failing file does
+    not stop the others: every other table is written and registered, then
+    the first failure in inventory order is raised, with a note per other
+    failure. Two files that map to one table (``a/t.csv`` and
+    ``a/sub/t.csv``) fail the second save with ``ValueError``.
+
     Returns table→rowcount, the counts observed on each table's write (no
-    read-back scan). Idempotent: provenance + IF-NOT-EXISTS semantics via
-    InfoCatalog."""
+    read-back scan). A re-run leaves the same table contents (each table
+    is overwritten), but its provenance is appended again: one more
+    ``info.files`` row and two more ``info.operations`` rows per table."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
     from datalake_local_spark.catalog import InfoCatalog
     from datalake_local_spark.functions.sanitize import fix_string, sanitize_db_name
     from datalake_local_spark.sources import csv_lines, json_source
     from datalake_local_spark.sources.excel import ingest_excel_file
 
-    catalog = InfoCatalog(spark)
-    inventory = discover_landing(spark, landing_root).collect()
-    for row in inventory:
+    def ingest(row, catalog: InfoCatalog) -> None:
         db = fix_string(row["bucket"])
         table = sanitize_db_name(fix_string(os.path.splitext(row["name"])[0]))
         if row["ext"] == "csv":
@@ -118,7 +131,7 @@ def ingest_landing(spark: SparkSession, landing_root: str) -> dict[str, int]:
             # the workbook is opened locally; file:// inventory paths map
             # back to plain paths (a remote object store routes through
             # sources.xlsx_native.read_xlsx_distributed's binaryFile scan
-            # instead — this loop is the catalog-sized driver dispatch,
+            # instead — this task is the catalog-sized driver dispatch,
             # not the data path)
             local = row["path"]
             if local.startswith("file:"):
@@ -134,4 +147,32 @@ def ingest_landing(spark: SparkSession, landing_root: str) -> dict[str, int]:
                     "xlsx_native.read_xlsx_distributed over binaryFile"
                 )
             ingest_excel_file(spark, local, db, catalog)
+
+    with InfoCatalog(spark) as catalog:
+        inventory = discover_landing(spark, landing_root).collect()
+        # once, here: concurrent saves into a new database would race to
+        # create it
+        for db in sorted({fix_string(row["bucket"]) for row in inventory}):
+            spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+        failures = []
+        if inventory:
+            threads = min(len(inventory), spark.sparkContext.defaultParallelism)
+            with ThreadPoolExecutor(threads) as pool:
+                # each wrap copies the caller's local properties (the job
+                # group among them), so no two tasks share one copy
+                futures = [
+                    pool.submit(inheritable_thread_target(spark)(ingest), row, catalog)
+                    for row in inventory
+                ]
+            failures = [
+                (row["path"], err)
+                for row, f in zip(inventory, futures)
+                if (err := f.exception()) is not None
+            ]
+        if failures:
+            (path, first), others = failures[0], failures[1:]
+            first.add_note(f"ingesting {path}")
+            for other_path, err in others:
+                first.add_note(f"also failed: {other_path}: {err!r}")
+            raise first
     return dict(catalog.rows_written)

@@ -3,6 +3,7 @@ catalog provenance, the xlsx parser and landing-zone ingestion."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from datalake_local_spark.catalog import InfoCatalog
@@ -51,7 +52,8 @@ def test_csv_lines_schema(spark, tmp_path):
 def test_json_ingest_roundtrip(spark, tmp_path):
     p = tmp_path / "data.jsonl"
     p.write_text('{"a": 1, "b": "x"}\n{"a": 2, "b": "y"}\n')
-    df = json_source.ingest_json(spark, str(p), "testdb_json", "t1", InfoCatalog(spark))
+    with InfoCatalog(spark) as cat:
+        df = json_source.ingest_json(spark, str(p), "testdb_json", "t1", cat)
     assert df.count() == 2
     assert spark.table("testdb_json.t1").count() == 2
     files = spark.table("info.files")
@@ -68,9 +70,9 @@ def test_parse_props_column(tables):
 
 
 def test_catalog_provenance_and_audit(spark):
-    cat = InfoCatalog(spark)
     df = spark.range(5).withColumnRenamed("id", "v")
-    fqn = cat.save_ingested(df, "testdb_prov", "numbers")
+    with InfoCatalog(spark) as cat:
+        fqn = cat.save_ingested(df, "testdb_prov", "numbers")
     assert fqn == "testdb_prov.numbers"
     assert spark.table(fqn).count() == 5
     assert cat.rows_written == {fqn: 5}
@@ -91,7 +93,9 @@ def test_catalog_provenance_and_audit(spark):
     files = spark.table("info.files").filter(F.col("table_name") == fqn).collect()
     assert len(files) == 1 and files[0]["creation"] is not None
     # idempotent overwrite re-run (reference D2 'IF NOT EXISTS' semantics)
-    cat.save_ingested(df, "testdb_prov", "numbers")
+    # in a second pass
+    with cat:
+        cat.save_ingested(df, "testdb_prov", "numbers")
     assert spark.table(fqn).count() == 5
 
 
@@ -99,9 +103,10 @@ def test_ingest_write_path_builds_no_python_list_frames(spark, tmp_path, monkeyp
     """Regression guard on the write path. A Python-list
     ``createDataFrame`` goes through ``SparkContext.parallelize`` and runs
     a Python-worker job when written, so the whole landing ingest must
-    never call it. Saving a 5-row frame costs the table write plus one
-    INSERT per info table (one Python-list frame per provenance row made
-    it 4 jobs), and the landing inventory collects without a job."""
+    never call it. Saving a 5-row frame and flushing its pass costs the
+    table write plus one INSERT per info table (one Python-list frame per
+    provenance row made it 4 jobs), and the landing inventory collects
+    without a job."""
     import uuid
 
     from datalake_local_spark.sources import landing
@@ -122,9 +127,11 @@ def test_ingest_write_path_builds_no_python_list_frames(spark, tmp_path, monkeyp
             sc._jsc.clearJobGroup()
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    cat = InfoCatalog(spark)
-    df = spark.range(5).withColumnRenamed("id", "v")
-    assert jobs(lambda: cat.save_ingested(df, "testdb_jobs", "five")) <= 3
+    def save_and_flush():
+        with InfoCatalog(spark) as cat:
+            cat.save_ingested(spark.range(5).withColumnRenamed("id", "v"), "testdb_jobs", "five")
+
+    assert jobs(save_and_flush) <= 3
 
     zone = tmp_path / "write_path_zone"
     (zone / "jobs_zone").mkdir(parents=True)
@@ -234,6 +241,171 @@ def test_landing_discovery_from_uri_root(spark, tmp_path):
     written = landing.ingest_landing(spark, uri_root)
     assert written == {"farm_a.ventas": 1, "farm_a.extra": 1}
     assert spark.table("farm_a.ventas").collect()[0]["n_animales"] == 5
+
+
+def test_ingest_landing_rejects_colliding_tables(spark, tmp_path):
+    """Two landing files that map to one table (a nested file with the
+    same stem, or ``.json`` beside ``.jsonl``) must not overwrite each
+    other: the second save of the table raises ``ValueError`` naming it
+    before its write, the table keeps exactly one file's rows, and
+    ``info.files`` registers it once. The other tables are still written."""
+    from datalake_local_spark.sources import landing
+
+    root = tmp_path / "landing_collide"
+    (root / "zona" / "sub").mkdir(parents=True)
+    (root / "zona" / "ventas.csv").write_text(SALES_FILE, encoding="latin-1")
+    (root / "zona" / "sub" / "ventas.csv").write_text(
+        "1/2/2024 Venta Animales: 5 Documento salida: 10\n"
+    )
+    (root / "zona" / "pedidos.json").write_text('{"a": 1}\n')
+    (root / "zona" / "pedidos.jsonl").write_text('{"b": "x"}\n{"b": "y"}\n')
+    (root / "zona" / "clientes.jsonl").write_text('{"c": 1}\n')
+
+    with pytest.raises(ValueError, match=r"zona\.(ventas|pedidos)") as raised:
+        landing.ingest_landing(spark, str(root))
+    # one collision is raised, the other noted on it
+    report = "\n".join([str(raised.value), *getattr(raised.value, "__notes__", [])])
+    assert "zona.ventas" in report and "zona.pedidos" in report
+
+    docs = sorted(r["documento_salida"] for r in spark.table("zona.ventas").collect())
+    assert docs in ([777, 888], [10])  # one file's rows, whole
+    pedidos = spark.table("zona.pedidos")
+    assert (pedidos.columns, pedidos.count()) in ((["a"], 1), (["b"], 2))
+    assert spark.table("zona.clientes").count() == 1
+    registered = (
+        spark.table("info.files").filter(F.col("table_name").startswith("zona.")).collect()
+    )
+    assert sorted(r["table_name"] for r in registered) == [
+        "zona.clientes", "zona.pedidos", "zona.ventas",
+    ]
+
+    # the claim is case-insensitive, like Spark's table names, and ends
+    # with the pass
+    df = spark.range(3).withColumnRenamed("id", "v")
+    with InfoCatalog(spark) as cat:
+        cat.save_ingested(df, "zona", "claimed")
+        with pytest.raises(ValueError, match=r"zona\.Claimed"):
+            cat.save_ingested(spark.range(7), "zona", "Claimed")
+    assert spark.table("zona.claimed").columns == ["v"]
+    with cat:
+        cat.save_ingested(spark.range(7), "zona", "claimed")
+    assert spark.table("zona.claimed").count() == 7
+
+
+def test_ingest_landing_failing_file_does_not_stop_the_pass(spark, tmp_path):
+    """A corrupt workbook beside a good CSV: the CSV table is still
+    written and registered, then the workbook's failure is raised with
+    its path noted on it."""
+    import zipfile
+
+    from datalake_local_spark.sources import landing
+
+    root = tmp_path / "landing_fail"
+    (root / "fallo").mkdir(parents=True)
+    (root / "fallo" / "ventas.csv").write_text(
+        "1/2/2024 Venta Animales: 5 Documento salida: 10\n"
+    )
+    (root / "fallo" / "roto.xlsx").write_bytes(b"not a workbook")
+
+    with pytest.raises(zipfile.BadZipFile) as raised:
+        landing.ingest_landing(spark, str(root))
+    assert any("roto.xlsx" in note for note in raised.value.__notes__)
+    assert spark.table("fallo.ventas").collect()[0]["n_animales"] == 5
+    files = spark.table("info.files").filter(F.col("table_name") == "fallo.ventas").collect()
+    assert len(files) == 1
+
+
+def test_ingest_landing_pass_runs_in_caller_group_and_flushes_once(
+    spark, tmp_path, monkeypatch
+):
+    """One pass over four tables (two sale-line CSVs, a JSONL file and a
+    one-sheet workbook). The pool's threads inherit the caller's local
+    properties, so every table write and the two INSERTs of the flush run
+    in the caller's job group (a thread without them files its jobs under
+    no group, out of reach of the group's metrics and of
+    ``cancelJobGroup``). The provenance is one ``register_table`` and one
+    ``log_operation`` call, and its rows are the ones a save-by-save write
+    made: ``create_database`` and ``ingest`` per table, each value in its
+    own column, and one ``info.files`` row per table."""
+    import uuid
+
+    from datalake_local_spark.sources import landing
+
+    calls = {"register_table": 0, "log_operation": 0}
+    for name in calls:
+        real = getattr(InfoCatalog, name)
+
+        def spy(self, *args, _name=name, _real=real):
+            calls[_name] += 1
+            return _real(self, *args)
+
+        monkeypatch.setattr(InfoCatalog, name, spy)
+
+    bucket = tmp_path / "pasada_zone"
+    bucket.mkdir()
+    (bucket / "norte.csv").write_text("1/2/2024 Venta Animales: 5 Documento salida: 10\n")
+    (bucket / "sur.csv").write_text(SALES_FILE, encoding="latin-1")
+    (bucket / "pedidos.jsonl").write_text('{"a": 1}\n{"a": 2}\n')
+    _write_minimal_xlsx(bucket / "libro.xlsx", {"s": (["k"], [[1], [2], [3]])})
+
+    sc = spark.sparkContext
+    group = f"ingest-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "landing ingest pass")
+    try:
+        written = landing.ingest_landing(spark, str(tmp_path))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(written) == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= len(written) + 2
+    assert calls == {"register_table": 1, "log_operation": 1}
+
+    ops = (
+        spark.table("info.operations")
+        .filter(F.col("target").isin("pasada_zone", *written))
+        .select("op", "target", "detail", F.col("ts").isNotNull().alias("has_ts"))
+        .collect()
+    )
+    assert sorted(tuple(r) for r in ops) == sorted(
+        [("create_database", "pasada_zone", "", True)] * len(written)
+        + [("ingest", fqn, "mode=overwrite", True) for fqn in written]
+    )
+    files = spark.table("info.files").filter(F.col("table_name").isin(*written)).collect()
+    assert sorted(r["table_name"] for r in files) == sorted(written)
+    assert all(r["creation"] is not None for r in files)
+
+
+def test_catalog_concurrent_saves_claim_and_stage_every_table(spark):
+    """Stress the catalog's shared state: more threads than cores, each
+    saving its own table and racing for one shared table, with a short
+    switch interval. Exactly one thread may win the shared table, and no
+    staged row or row count may be lost."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    threads = 2 * spark.sparkContext.defaultParallelism + 1
+
+    def save(i, cat):
+        cat.save_ingested(spark.range(i + 1), "stress_zone", f"t{i}")
+        try:
+            cat.save_ingested(spark.range(1), "stress_zone", "shared")
+            return True
+        except ValueError:
+            return False
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with InfoCatalog(spark) as cat, ThreadPoolExecutor(threads) as pool:
+            futures = [pool.submit(save, i, cat) for i in range(threads)]
+            won = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert sum(won) == 1
+    expected = {f"stress_zone.t{i}": i + 1 for i in range(threads)}
+    expected["stress_zone.shared"] = 1
+    assert cat.rows_written == expected
+    files = spark.table("info.files").filter(F.col("table_name").startswith("stress_zone."))
+    assert sorted(r["table_name"] for r in files.collect()) == sorted(expected)
 
 
 def _write_minimal_xlsx(path, sheets):
@@ -346,7 +518,8 @@ def test_ingest_excel_file_parses_workbook_once(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(xlsx_native, "parse_xlsx", counting_parse)
     monkeypatch.setattr(builtins, "open", counting_open)
-    excel.ingest_excel_file(spark, str(fpath), "testdb_once", InfoCatalog(spark))
+    with InfoCatalog(spark) as cat:
+        excel.ingest_excel_file(spark, str(fpath), "testdb_once", cat)
     monkeypatch.undo()
     assert len(parses) == 1
     assert len(opens) == 1
